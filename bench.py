@@ -72,20 +72,17 @@ REGION = (-5.0, 0.0, 5.0, 10.0)
 
 
 def make_spark(cores: int):
-    from pyspark.sql import SparkSession
+    from verde_spark.session import make_session
 
-    return (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(f"verde_spark-bench-{cores}")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        # compute-dense pandas stages are byte-tiny; keep their parallelism
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "20g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    return make_session(
+        f"local[{cores}]",
+        f"verde_spark-bench-{cores}",
+        **{
+            "spark.sql.shuffle.partitions": "64",
+            "spark.driver.memory": "20g",
+            "spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false",
+        },
     )
 
 

@@ -8,19 +8,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from verde_spark.session import make_session
 
-    session = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .appName("verde_spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        # keep byte-tiny / compute-dense pandas stages parallel (PLANS.md §7)
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    session = make_session(
+        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
+        "verde_spark-tests",
+        **{
+            "spark.sql.shuffle.partitions": "8",
+            "spark.driver.memory": "8g",
+            "spark.ui.enabled": "false",
+        },
     )
     yield session
     session.stop()

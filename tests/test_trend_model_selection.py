@@ -263,6 +263,23 @@ def test_kfold_rows_contiguous_scale_path_matches_exact(spark):
         )
 
 
+def test_kfold_rows_chunked_path_rejects_duplicate_index(spark):
+    """The chunked shuffle=False path checks index uniqueness like the
+    exact path does."""
+    from verde_spark.model_selection import KFoldRows
+
+    dup = spark.createDataFrame(
+        [(int(i) // 2, float(i)) for i in range(20)], "id long, x double"
+    )
+    with pytest.raises(ValueError, match="not unique"):
+        next(
+            KFoldRows(
+                n_splits=2, shuffle=False, index_col="id",
+                exact_threshold=0,
+            ).split(dup)
+        )
+
+
 def test_train_test_split_partial_fractions_discard_remainder(spark):
     """train_size + test_size < 1 discards the remainder (review r5:
     randomSplit normalizes weights, silently inflating both splits)."""

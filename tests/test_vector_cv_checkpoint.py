@@ -402,3 +402,51 @@ def test_checkpoint_load_without_manifest_is_empty(spark, tmp_path):
     )
     got = ckpt.load(spark)
     assert got.count() == 0 and "attempt" not in got.columns
+
+
+def test_checkpoint_load_raises_on_corrupt_data(spark, tmp_path):
+    """A corrupt data file fails the load; only a checkpoint with no data
+    files falls back to the empty frame of the schema snapshot."""
+    import os
+
+    ckpt = TileCheckpoint(str(tmp_path / "ckpt"))
+    ckpt.write(spark.createDataFrame(pd.DataFrame({"tile": [0, 1], "x": [1.0, 2.0]})))
+    for root, _dirs, files in os.walk(ckpt.data_path):
+        for f in files:
+            if f.endswith(".parquet"):
+                with open(os.path.join(root, f), "wb") as fh:
+                    fh.write(b"not parquet")
+    with pytest.raises(Exception, match="(?i)parquet|footer"):
+        ckpt.load(spark).collect()
+
+
+def test_checkpoint_load_raises_on_corrupt_manifest(spark, tmp_path):
+    import os
+
+    ckpt = TileCheckpoint(str(tmp_path / "ckpt"))
+    ckpt.write(spark.createDataFrame(pd.DataFrame({"tile": [0, 1], "x": [1.0, 2.0]})))
+    for f in os.listdir(ckpt.manifest_path):
+        if f.endswith(".parquet"):
+            with open(os.path.join(ckpt.manifest_path, f), "wb") as fh:
+                fh.write(b"not parquet")
+    with pytest.raises(Exception, match="(?i)parquet|footer"):
+        ckpt.load(spark).collect()
+
+
+def test_checkpoint_schema_snapshot_honours_uri(spark, tmp_path, monkeypatch):
+    """The schema snapshot goes through the Hadoop FS API, so a
+    ``file://`` checkpoint keeps it beside its data (a local ``open()``
+    would create a relative ``file:`` directory instead)."""
+    import os
+
+    root = tmp_path / "ckpt"
+    monkeypatch.chdir(tmp_path)
+    ckpt = TileCheckpoint(root.as_uri())
+    empty = spark.createDataFrame(pd.DataFrame({"tile": [0], "x": [1.0]})).filter(
+        F.lit(False)
+    )
+    ckpt.write(empty)
+    assert os.path.isfile(root / "_schema.json")
+    assert not os.path.exists(tmp_path / "file:")
+    got = ckpt.load(spark)
+    assert got.count() == 0 and got.columns == ["tile", "x"]

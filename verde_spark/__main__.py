@@ -17,7 +17,10 @@ the regular grid as parquet, and prints one JSON metrics line.
 The session is created with ``verde_spark.session.RECOMMENDED_CONF``
 applied on top of whatever spark-submit provides (existing conf wins for
 cluster-level settings; the AQE minPartitionSize fix is always set — see
-PLANS.md §7).
+PLANS.md §7).  It does not set ``spark.python.daemon.module``: the
+executors' daemon starts before ``--py-files`` reach ``sys.path``, so the
+``verde_spark_daemon`` entry that ``make_session`` uses on local masters
+would not be importable there.
 """
 
 from __future__ import annotations

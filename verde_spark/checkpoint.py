@@ -22,12 +22,56 @@ import time
 import uuid
 from typing import Callable, Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MANIFEST_DIR = "_manifest"
 DATA_DIR = "data"
+SCHEMA_FILE = "_schema.json"
+
+# the read errors that mean "no data files here yet"
+_NO_DATA = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def _read_parquet(spark: SparkSession, path: str) -> Optional[DataFrame]:
+    """*path* as parquet, or None when it holds no data files yet.
+
+    Every other failure (a corrupt file, a permission error) raises: a
+    checkpoint that cannot be read must not look like an empty one.
+    """
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() in _NO_DATA:
+            return None
+        raise
+
+
+def _hadoop_file(spark: SparkSession, path: str):
+    """(FileSystem, Path) of *path* via Hadoop, so any URI scheme works."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(sc._jsc.hadoopConfiguration()), hpath
+
+
+def _write_text(spark: SparkSession, path: str, text: str) -> None:
+    fs, hpath = _hadoop_file(spark, path)
+    out = fs.create(hpath, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _read_text(spark: SparkSession, path: str) -> str:
+    fs, hpath = _hadoop_file(spark, path)
+    stream = fs.open(hpath)
+    try:
+        return bytes(stream.readAllBytes()).decode("utf-8")
+    finally:
+        stream.close()
 
 
 class TileCheckpoint:
@@ -49,10 +93,8 @@ class TileCheckpoint:
     # -- reading ---------------------------------------------------------------
 
     def manifest(self, spark: SparkSession) -> Optional[DataFrame]:
-        try:
-            return spark.read.parquet(self.manifest_path)
-        except Exception:
-            return None
+        """The manifest table, or None before the first manifest append."""
+        return _read_parquet(spark, self.manifest_path)
 
     def completed_tiles(self, spark: SparkSession) -> DataFrame:
         """Distinct tile ids marked ok in the manifest (empty DF if none)."""
@@ -80,15 +122,13 @@ class TileCheckpoint:
         resume cannot surface duplicated rows (ADVICE r2).  ``attempt`` is
         a hive partition column, so the exclusion prunes whole directories.
         """
-        try:
-            out = spark.read.parquet(self.data_path)
-        except Exception:
+        out = _read_parquet(spark, self.data_path)
+        if out is None:
             # an all-empty-output run writes manifest rows but no
             # parquet files (zero rows emit no schema) — fall back to
             # the schema snapshot every write() persists
-            schema_file = os.path.join(self.path, "_schema.json")
-            with open(schema_file) as fh:
-                schema = T.StructType.fromJson(json.load(fh))
+            text = _read_text(spark, os.path.join(self.path, SCHEMA_FILE))
+            schema = T.StructType.fromJson(json.loads(text))
             return spark.createDataFrame([], schema)
         man = self.manifest(spark)
         if man is None:
@@ -136,9 +176,9 @@ class TileCheckpoint:
             )
             # schema snapshot: an all-empty result writes no parquet
             # files, so load() needs this to build the zero-row frame
-            os.makedirs(self.path, exist_ok=True)
-            with open(os.path.join(self.path, "_schema.json"), "w") as fh:
-                json.dump(json.loads(result.schema.json()), fh)
+            _write_text(
+                spark, os.path.join(self.path, SCHEMA_FILE), result.schema.json()
+            )
             duration = time.time() - t0
             hash_cols = [c for c in result.columns if c != self.tile_col]
             stats = result.groupBy(F.col(self.tile_col).alias("tile")).agg(

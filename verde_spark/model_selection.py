@@ -339,6 +339,9 @@ class KFoldRows:
                     f"needs a numeric/temporal index_col for range "
                     f"chunking; got {df.schema[idx].dataType.simpleString()}"
                 )
+            # duplicates would share a chunk rank and straddle fold edges
+            if not synthetic and df.select(idx).distinct().count() != n:
+                raise ValueError(f"index_col {idx!r} is not unique")
             k = self.n_splits
             nb = 64
             probs = [i / nb for i in range(1, nb)]
