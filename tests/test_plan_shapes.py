@@ -141,7 +141,7 @@ def test_knn_cell_join_is_equijoin(spark):
     queries = spark.createDataFrame(
         pd.DataFrame({"easting": [1.0, 5.0], "northing": [1.0, 5.0], "__qid": [0, 1]})
     )
-    out = knn_join(data, queries, k=3)
+    out = knn_join(data, queries, k=3, broadcast_threshold=0)
     plan = _plan(out)
     # the returned (lazy) plan unions the per-round checkpointed top-k
     # blocks; no cartesian/nested-loop join may appear (the bounded
@@ -151,6 +151,27 @@ def test_knn_cell_join_is_equijoin(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_knn_broadcast_is_one_map_over_queries(spark):
+    from verde_spark.operators.neighbors import knn_join
+
+    rng = np.random.RandomState(0)
+    data = spark.createDataFrame(
+        pd.DataFrame({"easting": rng.uniform(0, 10, 400), "northing": rng.uniform(0, 10, 400)})
+    )
+    queries = spark.range(50).select(
+        (F.col("id") % 10).cast("double").alias("easting"),
+        (F.col("id") / 5.0).alias("northing"),
+        F.col("id").alias("__qid"),
+    )
+    plan = _plan(knn_join(data, queries, k=3))
+    # a small data side is a broadcast index: the queries stream through
+    # one Arrow map, with no shuffle, join, window or checkpoint
+    assert plan.count("MapInPandas") == 1
+    assert "Exchange" not in plan
+    assert "Join" not in plan and "Window" not in plan
+    assert "Scan ExistingRDD" not in plan
 
 
 def test_text_scoring_single_stage_no_python(spark, pages_parquet):

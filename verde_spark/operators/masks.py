@@ -1,8 +1,8 @@
 """Region masks — distance and convex-hull (verde mask.py:17-219).
 
 ``distance_mask``: True where the nearest data point is within *maxdist*
-— the k=1 specialization of the kNN cell join, or (small data side) a
-broadcast NumPy scan inside an Arrow UDF.
+— the k=1 search of the broadcast kNN cell index inside an Arrow UDF
+(small data side), or the k=1 specialization of the kNN cell join.
 
 ``convexhull_mask``: the hull of N points is tiny however large N is, so
 it is computed distributively (per-partition Andrew-monotone-chain hulls
@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .neighbors import BROADCAST_THRESHOLD, CellIndex, knn_join
 
 # ---------------------------------------------------------------------------
 # convex hull
@@ -173,7 +174,7 @@ def distance_mask(
     data_northing: str = "northing",
     easting: str = "easting",
     northing: str = "northing",
-    broadcast_threshold: int = 200_000,
+    broadcast_threshold: int = BROADCAST_THRESHOLD,
     projection=None,
 ) -> DataFrame:
     """verde ``distance_mask`` (mask.py:17-113): True where the nearest data
@@ -188,9 +189,10 @@ def distance_mask(
     touches per-row Python.
 
     Small data side (≤ *broadcast_threshold* points, the common decimated
-    case) → broadcast the coordinate arrays and test with a vectorized
-    pandas UDF (one NumPy min-distance scan per Arrow batch). Large data
-    side → distributed k=1 cell join.
+    case) → broadcast a k=1 :class:`~verde_spark.operators.neighbors.CellIndex`
+    and test ``distance <= maxdist`` with a vectorized pandas UDF (one
+    index search per Arrow batch). Large data side → distributed k=1 cell
+    join. Data points with a null or NaN coordinate are left out.
     """
     if not isinstance(data, DataFrame):
         de = np.atleast_1d(np.asarray(data[0], dtype="float64")).ravel()
@@ -211,8 +213,6 @@ def distance_mask(
         return _distance_mask_broadcast(
             targets, de, dn, maxdist, mask_col, easting, northing, projection
         )
-    from .neighbors import knn_join
-
     qid = "__qid"
     # target columns move to a private namespace around the join (the
     # KNeighbors.predict pattern): knn_join refuses query frames whose
@@ -244,6 +244,7 @@ def distance_mask(
         query_easting=q_easting,
         query_northing=q_northing,
         query_id=qid,
+        broadcast_threshold=0,
     )
     aggs = [F.first(F.col(safe[c])).alias(c) for c in targets.columns] + [
         (F.min("distance") <= F.lit(float(maxdist))).alias(mask_col)
@@ -263,27 +264,15 @@ def _distance_mask_broadcast(
 ) -> DataFrame:
     from pyspark.sql.functions import pandas_udf
 
-    spark = targets.sparkSession
-    b_e = spark.sparkContext.broadcast(data_east)
-    b_n = spark.sparkContext.broadcast(data_north)
+    index = targets.sparkSession.sparkContext.broadcast(CellIndex(data_east, data_north))
     maxd = float(maxdist)
 
     @pandas_udf("boolean")
     def near(e: pd.Series, n: pd.Series) -> pd.Series:
-        de, dn = b_e.value, b_n.value
         qe = e.to_numpy("float64")
         qn = n.to_numpy("float64")
         if projection is not None:
             qe, qn = projection(qe, qn)
-            qe = np.asarray(qe, dtype="float64")
-            qn = np.asarray(qn, dtype="float64")
-        # chunk the data side so the (batch × chunk) temporary stays ~32 MB
-        chunk = max(1, 4_000_000 // max(len(qe), 1))
-        mind = np.full(len(qe), np.inf)
-        for lo in range(0, len(de), chunk):
-            hi = min(lo + chunk, len(de))
-            d2 = (qe[:, None] - de[lo:hi]) ** 2 + (qn[:, None] - dn[lo:hi]) ** 2
-            mind = np.minimum(mind, d2.min(axis=1))
-        return pd.Series(np.sqrt(mind) <= maxd)
+        return pd.Series(index.value.nearest_distance(qe, qn) <= maxd)
 
     return targets.withColumn(mask_col, near(F.col(easting), F.col(northing)))
