@@ -156,245 +156,11 @@ def scaling_job(spark):
     return _pipeline(spark, pages, 0.03, 0.25, 0.3, (400, 400))
 
 
-def text_pipeline(spark, n_pages: int) -> int:
-    """Crawl-text front door at scale (round 3): extract_text(html) →
-    geotag parse → canonical-url dedup, over the same sf-scaled page
-    table as the flagship.  Extraction/canonicalization are pure
-    codegen'd projections; the only shuffle is dedup_url's single
-    map-side-combinable max_by agg — the plan a 100 TB crawl pass needs.
-    Returns the surviving geotagged page count."""
-    from pyspark.sql import functions as F
-
-    from verde_spark.functions.urls import dedup_url
-    from verde_spark.sources.pages import geotagged
-
-    pages = spark.read.parquet(pages_parquet(spark, n_pages))
-    kept = dedup_url(pages)
-    tagged = geotagged(kept, from_html=True)
-    return tagged.filter(F.col("lon").isNotNull()).count()
-
-
-def warc_pipeline(spark, n_pages: int) -> int:
-    """WARC ingestion throughput (round 4): the sf-scaled page table →
-    deterministic WARC/1.0 file blobs (64 files) → ``split_warc_records``
-    parse.  Both halves are per-file Arrow-batched Python with zero
-    shuffle beyond the 64-way blob grouping — the Common-Crawl front-door
-    shape (one ~1 GiB file per task at cluster scale).  Returns parsed
-    record count."""
-    from pyspark.sql import functions as F
-
-    from verde_spark.sources.warc import split_warc_records, warc_table_from_documents
-
-    pages = spark.read.parquet(pages_parquet(spark, n_pages)).select(
-        F.substring("url", 21, 8).cast("long").alias("doc_id"),
-        F.col("html").cast("string").alias("text"),  # payload = raw html bytes
-    )
-    blobs = warc_table_from_documents(pages, files=64)
-    return split_warc_records(blobs).count()
-
-
-def charlm_pipeline(spark, n_pages: int) -> int:
-    """Char-bigram LM quality gate at page scale (round 4): CCNet-style
-    perplexity under the fixed English LM as a PURE Catalyst literal-fold
-    projection — zero Python, zero shuffle — then a threshold filter.
-    Returns surviving page count."""
-    from pyspark.sql import functions as F
-
-    from verde_spark.functions.charlm import ENGLISH_LM, perplexity_expr
-
-    pages = spark.read.parquet(pages_parquet(spark, n_pages))
-    scored = pages.select(perplexity_expr(ENGLISH_LM, "text").alias("ppl"))
-    return scored.filter(F.col("ppl") < 30.0).count()
-
-
-def dsir_pipeline(spark, n_pages: int) -> int:
-    """DSIR importance scoring at page scale (late round 4): hashed
-    word-n-gram log-weights under the code-constant EXAMPLE_DSIR model —
-    ONE pure Catalyst literal-fold projection, zero Python, zero shuffle
-    — aggregated so the projection cannot be pruned.  Returns scored
-    page count."""
-    from pyspark.sql import functions as F
-
-    from verde_spark.operators.dsir import EXAMPLE_DSIR
-
-    pages = spark.read.parquet(pages_parquet(spark, n_pages))
-    w = EXAMPLE_DSIR.weight_expr("text")
-    row = pages.select(w.alias("w")).agg(
-        F.count("w").alias("n"), F.sum("w").alias("s")
-    ).collect()[0]
-    return int(row["n"])
-
-
-def tfidf_pipeline(spark, n_pages: int) -> int:
-    """Hashed TF-IDF scoring at page scale (late round 4): sparse
-    L2-normalized vectors + cosine against one literal query vector —
-    one projection, zero shuffle (the tfidf_topk shape without the
-    top-k, so every page is scored).  Returns scored page count."""
-    from pyspark.sql import functions as F
-
-    from verde_spark.functions.tfidf import (
-        EXAMPLE_TFIDF,
-        reference_sparse_tfidf,
-        sparse_cosine,
-    )
-
-    q_idx, q_val = reference_sparse_tfidf(
-        "the survey region and the river canyon measurement", EXAMPLE_TFIDF
-    )
-    qv = F.struct(
-        F.lit(list(q_idx)).alias("indices"),
-        F.lit(list(q_val)).alias("values"),
-    )
-    pages = spark.read.parquet(pages_parquet(spark, n_pages))
-    s = sparse_cosine(EXAMPLE_TFIDF.sparse_expr("text"), qv)
-    row = pages.select(s.alias("s")).agg(
-        F.count("s").alias("n"), F.sum("s").alias("t")
-    ).collect()[0]
-    return int(row["n"])
-
-
-def wordlm_pipeline(spark, n_pages: int) -> int:
-    """Word-bigram stupid-backoff LM gate at page scale (round 5 — the
-    CCNet word-level fidelity upgrade of charlm_pipeline): logprob under
-    the fixed English word LM as a PURE Catalyst literal-fold projection
-    (word→id literal map + observed-bigram map + backoff array), zero
-    Python, zero shuffle — then a threshold filter.  Returns surviving
-    page count."""
-    from pyspark.sql import functions as F
-
-    from verde_spark.functions.wordlm import ENGLISH_WORD_LM, word_logprob_expr
-
-    pages = spark.read.parquet(pages_parquet(spark, n_pages))
-    lp = word_logprob_expr(ENGLISH_WORD_LM, "text")
-    return pages.select(lp.alias("lp")).filter(F.col("lp") > -400.0).count()
-
-
-def wordlm_arrow_pipeline(spark, n_pages: int) -> int:
-    """wordlm_pipeline on the PRODUCTION Arrow engine (round 5):
-    functions/wordlm.word_logprob_udf replays the fold's serial order in
-    batched Python behind Arrow, so it is BIT-identical to the Catalyst
-    literal-fold oracle (pinned in tests/test_wordlm.py) — same LM, same
-    threshold gate."""
-    from pyspark.sql import functions as F
-
-    from verde_spark.functions.wordlm import ENGLISH_WORD_LM, word_logprob_udf
-
-    pages = spark.read.parquet(pages_parquet(spark, n_pages))
-    lp = word_logprob_udf(ENGLISH_WORD_LM, "text")
-    return pages.select(lp.alias("lp")).filter(F.col("lp") > -400.0).count()
-
-
-def dsir_arrow_pipeline(spark, n_pages: int) -> int:
-    """The PRODUCTION engine for dsir_pipeline's projection (round 5,
-    VERDICT r4 #7): the shared vectorized hashed-bucket Arrow kernel
-    (operators/dsir.hashed_bucket_fold_udf) — same grams, same buckets,
-    pinned to the Catalyst fold at 1e-12 in pytest; the fold stays the
-    cross-engine oracle."""
-    from pyspark.sql import functions as F
-
-    from verde_spark.operators.dsir import EXAMPLE_DSIR, dsir_weight_udf
-
-    pages = spark.read.parquet(pages_parquet(spark, n_pages))
-    w = dsir_weight_udf(EXAMPLE_DSIR)("text")
-    row = pages.select(w.alias("w")).agg(
-        F.count("w").alias("n"), F.sum("w").alias("s")
-    ).collect()[0]
-    return int(row["n"])
-
-
-def langid_arrow_pipeline(spark, n_pages: int) -> int:
-    """Language routing at page scale (round 5): char-n-gram profile
-    language ID on the PRODUCTION Arrow engine
-    (functions/langid.lang_id_ngram_udf — per-doc bigram bincount, one
-    counts@logp matrix product scoring all 5 profiles at once).  The
-    Catalyst serial fold stays the registry/oracle engine
-    (lang_id_ngram); prediction agreement is pinned in
-    tests/test_langid.py.  Returns the per-language distribution's total
-    page count (a tiny 6-row agg, so the projection can't be pruned)."""
-    from pyspark.sql import functions as F
-
-    from verde_spark.functions.langid import lang_id_ngram_udf
-
-    pages = spark.read.parquet(pages_parquet(spark, n_pages))
-    dist = (
-        pages.select(lang_id_ngram_udf()("text").alias("lang"))
-        .groupBy("lang")
-        .count()
-        .collect()
-    )
-    return int(sum(r["count"] for r in dist))
-
-
-def _q_quality_arrow(spark, sf_dir: str):
-    """quality_lr's projection on the PRODUCTION Arrow engine
-    (QualityClassifier.score_udf — the shared hashed-bucket kernel with
-    init=bias): the round-4 verdict's named lever for the slowest bench
-    query.  The literal fold stays the registry/oracle engine; parity is
-    pinned in tests/test_quality.py::test_score_udf_matches_fold."""
-    from pyspark.sql import functions as F
-
-    from verde_spark.operators.quality import EXAMPLE_QUALITY
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        docs.filter(F.col("text").isNotNull())
-        .select("doc_id", EXAMPLE_QUALITY.score_udf("text").alias("lr_score"))
-    )
-
-
-def kmeans_bench(spark) -> int:
-    """Bit-deterministic distributed k-means (round 4): 200k synthetic
-    16-dim vectors, k=8, 3 Lloyd iterations.  Per iteration one scan +
-    codegen argmin + a k·(dim+1)-number aggregate — the data never
-    shuffles.  Returns clustered row count."""
-    from pyspark.sql import functions as F
-
-    from verde_spark.operators.clustering import kmeans_fit
-
-    df = spark.range(200_000).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(16)),
-            lambda j: (
-                (F.xxhash64(F.col("id"), j).cast("double") / F.lit(float(1 << 64)))
-                + F.lit(0.5)
-            ).cast("float"),
-        ).alias("embedding"),
-    )
-    _, model = kmeans_fit(df, k=8, iterations=3)
-    return sum(model.sizes)
-
-
-def kmeans_arrow_bench(spark) -> int:
-    """kmeans_200k on the PRODUCTION Arrow engine (``engine="arrow"``:
-    vectorized-NumPy assignment, BIT-identical to the Catalyst argmin
-    fold — pinned in tests/test_clustering.py).  The Catalyst engine
-    stays the registry/oracle path; same 200k×16-dim input, k=8,
-    3 Lloyd iterations."""
-    from pyspark.sql import functions as F
-
-    from verde_spark.operators.clustering import kmeans_fit
-
-    df = spark.range(200_000).select(
-        F.col("id").alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(16)),
-            lambda j: (
-                (F.xxhash64(F.col("id"), j).cast("double") / F.lit(float(1 << 64)))
-                + F.lit(0.5)
-            ).cast("float"),
-        ).alias("embedding"),
-    )
-    _, model = kmeans_fit(df, k=8, iterations=3, engine="arrow")
-    return sum(model.sizes)
-
-
 def bench_queries(spark):
     """Headline operator set over the driver-provided tables."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    qs.update(entrymod.retired_queries())  # over-cap r4 ops are benched too
     picks = [
         "block_mean",
         "block_stats",
@@ -402,23 +168,10 @@ def bench_queries(spark):
         "knn_join",
         "distance_mask",
         "cell_counts",
-        "dedup_exact",
-        "token_counts",
-        "cosine_topk",
         "point_in_polygon",
         "zonal_stats",
         "spline_grid",
-        "dedup_components",  # round 2: transitive closure (iterative joins)
-        "ivf_topk",  # round 2: IVF ANN probe path
-        "winnow_pairs",  # round 3: rolling-hash fingerprint near-dup
-        "bm25_topk",  # round 4: Okapi BM25 batch relevance ranking
-        "quality_lr",  # round 4: discriminative classifier literal-fold scoring
-        "semdedup_pairs",  # round 4: cluster-partitioned semantic dedup
-        "word_lm_logprob",  # round 5: word-bigram stupid-backoff LM scoring
-        "lang_id_ngram",  # round 5: char-n-gram language ID (Cavnar-Trenkle)
-        "quality_arrow",  # round 5: quality_lr on the production Arrow kernel
     ]
-    qs["quality_arrow"] = _q_quality_arrow
     times = {}
     # Rep 0 is a DISCARDED warm-up (per-query first calls pay Python-worker
     # spin-up / Arrow init / JIT: r2 published those cold numbers and falsely
@@ -756,83 +509,6 @@ def main():
         n_pts, n_nodes = flagship(spark, N_PAGES)
         t_flag = min(t_flag, time.time() - t0)
     qtimes = {"flagship_pipeline": round(t_flag, 3)}
-    text_pipeline(spark, max(N_PAGES // 20, 10_000))  # warm
-    t_text, n_text = float("inf"), 0
-    for _rep in range(3):
-        t0 = time.time()
-        n_text = text_pipeline(spark, N_PAGES)
-        t_text = min(t_text, time.time() - t0)
-    qtimes["text_pipeline"] = round(t_text, 3)
-    warc_pipeline(spark, max(N_PAGES // 20, 10_000))  # warm
-    t_warc, n_warc = float("inf"), 0
-    for _rep in range(3):
-        t0 = time.time()
-        n_warc = warc_pipeline(spark, N_PAGES)
-        t_warc = min(t_warc, time.time() - t0)
-    qtimes["warc_ingest"] = round(t_warc, 3)
-    charlm_pipeline(spark, max(N_PAGES // 20, 10_000))  # warm
-    t_lm = float("inf")
-    for _rep in range(3):
-        t0 = time.time()
-        charlm_pipeline(spark, N_PAGES)
-        t_lm = min(t_lm, time.time() - t0)
-    qtimes["charlm_score"] = round(t_lm, 3)
-    dsir_pipeline(spark, max(N_PAGES // 20, 10_000))  # warm
-    t_ds = float("inf")
-    for _rep in range(3):
-        t0 = time.time()
-        dsir_pipeline(spark, N_PAGES)
-        t_ds = min(t_ds, time.time() - t0)
-    qtimes["dsir_score"] = round(t_ds, 3)
-    dsir_arrow_pipeline(spark, max(N_PAGES // 20, 10_000))  # warm
-    t_da = float("inf")
-    for _rep in range(3):
-        t0 = time.time()
-        dsir_arrow_pipeline(spark, N_PAGES)
-        t_da = min(t_da, time.time() - t0)
-    qtimes["dsir_arrow"] = round(t_da, 3)
-    langid_arrow_pipeline(spark, max(N_PAGES // 20, 10_000))  # warm
-    t_la, n_la = float("inf"), 0
-    for _rep in range(3):
-        t0 = time.time()
-        n_la = langid_arrow_pipeline(spark, N_PAGES)
-        t_la = min(t_la, time.time() - t0)
-    qtimes["langid_arrow"] = round(t_la, 3)
-    wordlm_pipeline(spark, max(N_PAGES // 20, 10_000))  # warm
-    t_wl = float("inf")
-    for _rep in range(3):
-        t0 = time.time()
-        wordlm_pipeline(spark, N_PAGES)
-        t_wl = min(t_wl, time.time() - t0)
-    qtimes["wordlm_score"] = round(t_wl, 3)
-    wordlm_arrow_pipeline(spark, max(N_PAGES // 20, 10_000))  # warm
-    t_wa = float("inf")
-    for _rep in range(3):
-        t0 = time.time()
-        wordlm_arrow_pipeline(spark, N_PAGES)
-        t_wa = min(t_wa, time.time() - t0)
-    qtimes["wordlm_arrow"] = round(t_wa, 3)
-    tfidf_pipeline(spark, max(N_PAGES // 20, 10_000))  # warm
-    t_tf = float("inf")
-    for _rep in range(3):
-        t0 = time.time()
-        tfidf_pipeline(spark, N_PAGES)
-        t_tf = min(t_tf, time.time() - t0)
-    qtimes["tfidf_score"] = round(t_tf, 3)
-    kmeans_bench(spark)  # warm
-    t_km = float("inf")
-    for _rep in range(3):
-        t0 = time.time()
-        kmeans_bench(spark)
-        t_km = min(t_km, time.time() - t0)
-    qtimes["kmeans_200k"] = round(t_km, 3)
-    kmeans_arrow_bench(spark)  # warm
-    t_ka = float("inf")
-    for _rep in range(3):
-        t0 = time.time()
-        kmeans_arrow_bench(spark)
-        t_ka = min(t_ka, time.time() - t0)
-    qtimes["kmeans_arrow"] = round(t_ka, 3)
     qtimes.update(bench_queries(spark))
     result["reference_head_to_head"] = reference_head_to_head(spark)
     spark.stop()
@@ -840,15 +516,6 @@ def main():
     result["queries"] = qtimes
     result["value"] = round(sum(qtimes.values()), 3)
     result["gridded_points_per_sec"] = round(n_pts / t_flag, 1)
-    result["text_pages_per_sec"] = round(n_text / qtimes["text_pipeline"], 1)
-    result["warc_records_per_sec"] = round(n_warc / qtimes["warc_ingest"], 1)
-    result["lm_scored_pages_per_sec"] = round(n_pts / qtimes["charlm_score"], 1)
-    result["dsir_scored_pages_per_sec"] = round(n_pts / qtimes["dsir_score"], 1)
-    result["dsir_arrow_pages_per_sec"] = round(n_pts / qtimes["dsir_arrow"], 1)
-    result["langid_arrow_pages_per_sec"] = round(n_la / qtimes["langid_arrow"], 1)
-    result["wordlm_scored_pages_per_sec"] = round(n_pts / qtimes["wordlm_score"], 1)
-    result["wordlm_arrow_pages_per_sec"] = round(n_pts / qtimes["wordlm_arrow"], 1)
-    result["tfidf_scored_pages_per_sec"] = round(n_pts / qtimes["tfidf_score"], 1)
     result["flagship_input_points"] = n_pts
     result["flagship_grid_nodes"] = n_nodes
 
@@ -879,8 +546,6 @@ def _write_bench_md(result):
         "",
         f"- headline total: {result['value']} s across {len(result['queries'])} queries",
         f"- gridded points/sec (local[{CPUS}]): {result['gridded_points_per_sec']:,}",
-        f"- text front door (extract_text(html)→geotag→canonical-url dedup), "
-        f"pages/sec (local[{CPUS}]): {result['text_pages_per_sec']:,}",
         "",
         "## Reference head-to-head (single-node, same data scale)",
         "",
@@ -1027,137 +692,6 @@ def _write_bench_md(result):
         "",
         "Per-query seconds: " + json.dumps(result["queries"]),
     ]
-    sweep_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "SWEEP_TEXT.json"
-    )
-    if os.path.exists(sweep_path):
-        try:
-            sweep = json.load(open(sweep_path))["clean_corpus_sweep"]
-            lines += [
-                "",
-                "## Text-path data-size scaling (clean_corpus)",
-                "",
-                "The full gate stack (token/stopword/repetition/quality + "
-                "url-dedup + exact content dedup) over the deterministic "
-                "synthetic page table at three sizes — same protocol as the "
-                "query benches (local[32], warm parquet, discarded warm-up, "
-                "best-of-3; produced by tools/scale_sweep_text.py, persisted "
-                "in SWEEP_TEXT.json):",
-                "",
-                "| pages | sec | pages/sec | size× | time× |",
-                "|---|---|---|---|---|",
-            ]
-            for r in sweep:
-                lines.append(
-                    f"| {r['pages']:,} | {r['sec']} | {r['pages_per_sec']:,} "
-                    f"| {r['size_ratio_vs_smallest']} "
-                    f"| {r['time_ratio_vs_smallest']} |"
-                )
-            lines += [
-                "",
-                "Time grows SUB-linearly (throughput rises with size as "
-                "the fixed session/plan cost amortizes; no superlinear "
-                "term anywhere) — the 100 TB evidence for the text front "
-                "door: the plan is two bounded window shuffles + pure "
-                "projections, so cost scales with input bytes, not with "
-                "any all-pairs or global-sort term.",
-            ]
-        except Exception:  # noqa: BLE001 - sweep artifact is advisory
-            pass
-    dsweep_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "SWEEP_DEDUP.json"
-    )
-    if os.path.exists(dsweep_path):
-        try:
-            dsweep = json.load(open(dsweep_path))["dedup_minhash_sweep"]
-            lines += [
-                "",
-                "## Near-dup path data-size scaling (dedup_minhash)",
-                "",
-                "The full MinHash pipeline (shingle → 64-hash signature "
-                "[arrow engine] → 16-band LSH → bucket join → exact "
-                "Jaccard ≥ 0.8 → connected components → anti-join) over a "
-                "deterministic corpus with PLANTED near-duplicates (one "
-                "Jaccard-0.854 pair per 16-doc block, so the true pair "
-                "count grows linearly by construction).  `dropped` equals "
-                "the planted count EXACTLY at every size — detection is "
-                "complete with zero false positives — and any all-pairs "
-                "term would show as super-linear time (produced by "
-                "tools/scale_sweep_dedup.py, persisted in "
-                "SWEEP_DEDUP.json):",
-                "",
-                "| docs | planted pairs | dropped | sec | docs/sec | size× | time× |",
-                "|---|---|---|---|---|---|---|",
-            ]
-            for r in dsweep:
-                lines.append(
-                    f"| {r['docs']:,} | {r['planted_pairs']:,} "
-                    f"| {r['dropped']:,} | {r['sec']} | {r['docs_per_sec']:,} "
-                    f"| {r['size_ratio_vs_smallest']} "
-                    f"| {r['time_ratio_vs_smallest']} |"
-                )
-            lines += [
-                "",
-                "Throughput stays FLAT as size grows 16× (time is "
-                "near-linear in docs, no super-linear term): LSH keeps "
-                "candidate pairs proportional to true duplicates "
-                "(bounded-key bucket join), the Jaccard verify touches "
-                "only candidates, and components run on the tiny edge "
-                "list — the near-dup family's 100 TB evidence.",
-            ]
-        except Exception:  # noqa: BLE001 - sweep artifact is advisory
-            pass
-    asweep_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "SWEEP_ANN.json"
-    )
-    if os.path.exists(asweep_path):
-        try:
-            adata = json.load(open(asweep_path))
-            asweep = adata["ann_sweep"]
-            lines += [
-                "",
-                "## ANN path data-size scaling (cosine_topk vs ivf_topk)",
-                "",
-                f"Exact brute-force top-{adata['k']} vs IVF probing "
-                f"({adata['n_centroids']} cells trained once on a "
-                f"bounded sample, n_probe={adata['n_probe']}, layout = "
-                f"build_ivf_index parquet partitioned by cluster, probe "
-                f"engine = arrow — pinned identical to the Catalyst "
-                f"oracle path in pytest) over deterministic clustered "
-                f"embeddings ({adata['dim']} dims) with a SELECTIVE "
-                f"{adata['n_queries']}-query batch probing ≤ "
-                f"{adata['n_queries'] * adata['n_probe']}/"
-                f"{adata['n_centroids']} of the partitions.  recall@10 "
-                "is IVF's overlap with the exact answer (produced by "
-                "tools/scale_sweep_ann.py, persisted in SWEEP_ANN.json):",
-                "",
-                "| docs | brute sec | ivf sec | ivf speedup | recall@10 | ivf docs/sec |",
-                "|---|---|---|---|---|---|",
-            ]
-            for r in asweep:
-                lines.append(
-                    f"| {r['docs']:,} | {r['brute_sec']} | {r['ivf_sec']} "
-                    f"| {r['ivf_speedup']}× | {r['recall_at_10']} "
-                    f"| {r['ivf_docs_per_sec']:,} |"
-                )
-            lines += [
-                "",
-                "IVF time stays nearly FLAT as the corpus grows 16× "
-                "(it reads only the probed partitions — statically "
-                "pruned, plan-asserted) while brute-force grows with the "
-                "full scan, so the speedup crosses 1 and keeps growing "
-                "toward the probed-fraction bound — extrapolate to "
-                "100 TB and brute scans everything while IVF scans the "
-                "probed quarter (or less, with more cells).  Recall "
-                "holds ≥ 0.99 throughout.  At the smallest sizes fixed "
-                "probe overhead dominates and brute wins: a batch "
-                "probing EVERY cell reduces IVF to a full scan, which "
-                "is brute's regime by design — the similarity-search "
-                "scale path is selective probing over a partitioned "
-                "layout.",
-            ]
-        except Exception:  # noqa: BLE001 - sweep artifact is advisory
-            pass
     ratios = [r for r in sc.get("per_round_1_to_4", []) if r]
     if ratios and (max(ratios) > 1.0 or max(ratios) / min(ratios) > 1.4):
         lines += [

@@ -1,5 +1,5 @@
 """Web-scale layer: pages table, geotag parse, cell index, dedup,
-similarity, multimodal plumbing, grid IO."""
+similarity, grid IO."""
 
 import numpy as np
 import numpy.testing as npt
@@ -33,7 +33,6 @@ from verde_spark.operators.dedup import (
     lsh_candidate_pairs,
     simhash_near_duplicates,
 )
-from verde_spark.operators.multimodal import extract_features, payload_metadata
 from verde_spark.operators.similarity import cosine_topk, lsh_bucketed_topk
 from verde_spark.sources.pages import geotagged, synthesize_pages
 from verde_spark.sources.grid_io import grid_to_table, load_surfer, table_to_grid
@@ -368,24 +367,6 @@ def test_lsh_bucketed_topk_recall(spark):
     assert (merged["neighbor_id_a"] == merged["query_id"]).all()
 
 
-# --- multimodal -------------------------------------------------------------------
-
-
-def test_multimodal_plumbing(spark):
-    pages = synthesize_pages(spark, 50, seed=3)
-    feats = extract_features(pages, payload_col="html", feature_dim=4)
-    pdf = feats.toPandas()
-    assert all(len(v) == 4 for v in pdf["features"])
-    # deterministic: same payload → same features
-    again = extract_features(pages, payload_col="html", feature_dim=4).toPandas()
-    a = np.stack(pdf.sort_values("url")["features"].to_numpy())
-    b = np.stack(again.sort_values("url")["features"].to_numpy())
-    npt.assert_array_equal(a, b)
-    meta = payload_metadata(pages).toPandas()
-    assert (meta["payload_kind"] == "html").all()
-    assert (meta["payload_bytes"] > 0).all()
-
-
 # --- grid io ------------------------------------------------------------------------
 
 
@@ -493,29 +474,6 @@ def test_embedding_near_dup(spark):
     assert dropped == {j for _, j in want}
 
 
-def test_multimodal_resize_and_frames(spark):
-    # resize: real schema/batch plumbing, stubbed decode; deterministic
-    from verde_spark.operators.multimodal import resize_images, sample_frames
-
-    pages = synthesize_pages(spark, 20)
-    resized = resize_images(pages, width=4, height=4, source_size=16)
-    pdf = resized.select("url", "pixels", "out_width", "out_height", "channels").toPandas()
-    assert len(pdf) == 20
-    assert (pdf["out_width"] == 4).all() and (pdf["channels"] == 3).all()
-    assert all(len(p) == 4 * 4 * 3 for p in pdf["pixels"])
-    # deterministic: same payload -> same pixels
-    pdf2 = resize_images(pages, width=4, height=4, source_size=16).select("url", "pixels").toPandas()
-    m1 = dict(zip(pdf["url"], pdf["pixels"]))
-    m2 = dict(zip(pdf2["url"], pdf2["pixels"]))
-    assert m1 == m2
-
-    frames = sample_frames(pages, num_frames=3, id_cols=["url"])
-    fdf = frames.toPandas()
-    assert len(fdf) == 60  # 20 pages x 3 frames
-    assert set(fdf["frame_idx"]) == {0, 1, 2}
-    assert fdf.groupby("url").size().eq(3).all()
-
-
 def test_geotag_malformed_inputs(spark):
     # malformed / missing geotags yield nulls, never errors or fake coords
     import pandas as pd
@@ -564,22 +522,6 @@ def test_embedding_near_dup_null_first_row_still_finds_pairs(spark):
     ).coalesce(1)  # one partition: the NULL row is scanned first
     out = embedding_near_duplicate_pairs(df, threshold=0.99).toPandas()
     assert set(zip(out["id_a"], out["id_b"])) == {(1, 2)}
-
-
-def test_sample_frames_preserves_id_dtype(spark):
-    # ids must come through as int64, not float (the iterrows upcast trap)
-    import pandas as pd
-
-    from verde_spark.operators.multimodal import sample_frames
-
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2], "payload": [b"abc", b"def"]})
-    )
-    out = sample_frames(df, payload_col="payload", num_frames=2, id_cols=["doc_id"])
-    assert dict(out.dtypes)["doc_id"] == "bigint"
-    got = out.toPandas()
-    assert sorted(got["doc_id"].unique().tolist()) == [1, 2]
-    assert len(got) == 4
 
 
 def test_connected_components_chain_star_and_pointer_jumping(spark):
@@ -834,60 +776,6 @@ def test_hash_split_stability_and_no_shuffle(spark):
     merged = o.merge(s, on="doc_id", suffixes=("_a", "_b"))
     assert (merged["split_a"] == merged["split_b"]).all()
     out.unpersist()
-
-
-def test_resize_raw_images_exact_values(spark):
-    """The raw-bitmap path is REAL end-to-end: known gradient image in,
-    exact block means out."""
-    from verde_spark.operators.multimodal import resize_raw_images
-
-    h, w, c = 16, 16, 3
-    img = np.arange(h * w * c, dtype=np.uint64).reshape(h, w, c) % 256
-    img = img.astype(np.uint8)
-    rows = [
-        (1, img.tobytes(), w, h, c),
-        (2, b"too short", w, h, c),  # malformed → nulls
-        (3, None, w, h, c),
-    ]
-    df = spark.createDataFrame(
-        rows, "id long, payload binary, width int, height int, channels int"
-    )
-    out = resize_raw_images(df, out_width=4, out_height=4).orderBy("id").toPandas()
-    got = np.frombuffer(out["pixels"][0], dtype=np.uint8).reshape(4, 4, 3)
-    want = img.reshape(4, 4, 4, 4, 3).mean(axis=(1, 3)).astype(np.uint8)
-    npt.assert_array_equal(got, want)
-    assert out["pixels"][1] is None and out["pixels"][2] is None
-    assert out["out_width"][0] == 4 and pd.isna(out["out_width"][1])
-    # smaller than the output grid → null, not a reshape task failure
-    # (review r5: the contract is nulls, never task-killing exceptions)
-    tiny = np.zeros((4, 16, 3), dtype=np.uint8)
-    small_df = spark.createDataFrame(
-        [(9, tiny.tobytes(), 16, 4, 3)],
-        "id long, payload binary, width int, height int, channels int",
-    )
-    got2 = resize_raw_images(small_df, out_width=8, out_height=8).toPandas()
-    assert got2["pixels"][0] is None
-
-
-def test_pcm_band_energies_pure_tone(spark):
-    """A pure tone's energy must land in the band containing its
-    frequency — real DSP, no stub."""
-    from verde_spark.operators.multimodal import pcm_band_energies
-
-    n = 4096
-    t = np.arange(n)
-    def tone(cycles):
-        return (10000 * np.sin(2 * np.pi * cycles * t / n)).astype("<i2").tobytes()
-
-    # cycles 100 → bin 100 of 2048 → band 0 of 8; cycles 1900 → band 7
-    rows = [(1, tone(100)), (2, tone(1900)), (3, None), (4, b"\x01")]
-    df = spark.createDataFrame(rows, "id long, payload binary")
-    out = pcm_band_energies(df, n_bands=8).orderBy("id").toPandas()
-    e1 = np.array(out["band_energies"][0])
-    e2 = np.array(out["band_energies"][1])
-    assert e1.argmax() == 0 and e2.argmax() == 7
-    assert len(e1) == 8
-    assert out["band_energies"][2] is None and out["band_energies"][3] is None
 
 
 def test_mask_to_runs(spark):

@@ -23,10 +23,8 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents "
-    "embeddings"
-).split()
+#: the tables the registered queries read
+TABLES = ("events", "documents")
 
 
 def canon(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -72,9 +70,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    args = [a for a in sys.argv[1:] if a != "--only"]
-    include_retired = "--retired" in args
-    only = set(a for a in args if a != "--retired")
+    only = set(a for a in sys.argv[1:] if a != "--only")
 
     spark = (
         SparkSession.builder.master(
@@ -99,9 +95,6 @@ def main() -> int:
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
-    if include_retired:
-        qs.update(entry.retired_queries())
-        oracles.update(entry.retired_oracle_sql())
     results: dict[str, dict] = {}
     failed = []
     for name, fn in qs.items():

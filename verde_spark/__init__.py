@@ -52,97 +52,11 @@ from .operators.vector import Vector, VectorSpline2D
 from .operators.splinecv import SplineCV
 from .operators.polygons import point_in_polygon, polygon_join, rasterize, zonal_stats
 from .functions.extract import extract_text, reference_extract_text
-from .functions.urls import canonical_url, dedup_url, domain_of, top_domains
-from .functions.pii import pii_counts, redact_pii, reference_redact_pii
-from .functions.text import passes_c4, passes_gopher
-from .operators.decontam import contamination_stats, decontaminate
-from .operators.dedup import drop_duplicate_paragraphs, drop_duplicate_spans
-from .operators.sampling import cap_per_domain
-from .operators.packing import pack_sequences, packing_stats
-from .operators.search import bm25_scores, bm25_topk
-from .operators.mixing import (
-    perplexity_buckets,
-    repeat_weighted,
-    sample_to_mix,
-    temperature_mix,
-    temperature_targets,
-)
-from .operators.bloom import (
-    bloom_might_contain,
-    bloom_parameters,
-    build_bloom,
-)
-from .functions.normalize import (
-    normalize_text,
-    normalized_fingerprint,
-)
-from .functions.vocab import build_vocab, encode_tokens
-from .functions.bpe import EXAMPLE_BPE, BpeModel, train_bpe
-from .operators.quality import (
-    EXAMPLE_QUALITY,
-    QualityClassifier,
-    fit_quality_classifier,
-)
-from .operators.dedup import (
-    novel_docs,
-    seen_hashes,
-    semantic_dedup,
-    semantic_dup_pairs,
-)
-from .operators.crawl import crawl_schedule
-from .operators.clustering import kmeans_fit
-from .functions.charlm import ENGLISH_LM, perplexity_expr, train_char_lm
-from .sources.warc import read_warc, split_warc_records
-from .pipelines import clean_corpus, corpus_report
-from .operators.linkgraph import (
-    extract_anchor_texts,
-    extract_links,
-    host_graph,
-    pagerank,
-    top_anchor_texts,
-)
-from .operators.crawl import (
-    filter_blocklist,
-    meta_robots,
-    reference_meta_robots,
-    reference_robots_allowed,
-    reference_robots_crawl_delay,
-    reference_robots_rules,
-    reference_robots_sitemaps,
-    reference_sitemap_entries,
-    robots_allowed_expr,
-    robots_crawl_delay,
-    robots_filter,
-    robots_matchable,
-    robots_rules,
-    robots_sitemaps,
-    robots_txt_filter,
-    robots_txt_rules,
-    sitemap_entries,
-    sitemap_urls,
-)
-from .operators.dsir import (
-    DsirModel,
-    bucket_counts,
-    dsir_bucket_ids,
-    dsir_resample,
-    dsir_weight_udf,
-    fit_dsir,
-    fit_dsir_python,
-)
-from .functions.tfidf import (
-    TfidfModel,
-    fit_tfidf,
-    fit_tfidf_python,
-    sparse_cosine,
-    tfidf_topk,
-)
 from .operators.projections import project_grid, project_points
 from .checkpoint import TileCheckpoint, run_resumable
 from .operators.windows import expanding_window, rolling_window
 from .operators.neighbors import median_distance
 from .sources.grid_io import grid_to_table, load_surfer, table_to_grid
-from .sources.snapshots import SnapshotStore
 from .utils import maxabs, minmax
 from . import datasets, synthetic
 
@@ -161,6 +75,92 @@ from .model_selection import (
 __version__ = "0.1.0"
 
 from .session import RECOMMENDED_CONF, make_session
+
+# The web-text stack (urls, dedup, crawl, LMs, tokenizers, corpus
+# pipelines) loads on first attribute access, so a Python worker that
+# unpickles a spline or mask UDF imports only the spatial engine.
+_LAZY = {
+    "canonical_url": "functions.urls",
+    "dedup_url": "functions.urls",
+    "domain_of": "functions.urls",
+    "top_domains": "functions.urls",
+    "pii_counts": "functions.pii",
+    "redact_pii": "functions.pii",
+    "reference_redact_pii": "functions.pii",
+    "passes_c4": "functions.text",
+    "passes_gopher": "functions.text",
+    "contamination_stats": "operators.decontam",
+    "decontaminate": "operators.decontam",
+    "drop_duplicate_paragraphs": "operators.dedup",
+    "drop_duplicate_spans": "operators.dedup",
+    "cap_per_domain": "operators.sampling",
+    "pack_sequences": "operators.packing",
+    "packing_stats": "operators.packing",
+    "bm25_scores": "operators.search",
+    "bm25_topk": "operators.search",
+    "perplexity_buckets": "operators.mixing",
+    "repeat_weighted": "operators.mixing",
+    "sample_to_mix": "operators.mixing",
+    "temperature_mix": "operators.mixing",
+    "temperature_targets": "operators.mixing",
+    "bloom_might_contain": "operators.bloom",
+    "bloom_parameters": "operators.bloom",
+    "build_bloom": "operators.bloom",
+    "normalize_text": "functions.normalize",
+    "normalized_fingerprint": "functions.normalize",
+    "build_vocab": "functions.vocab",
+    "encode_tokens": "functions.vocab",
+    "EXAMPLE_BPE": "functions.bpe",
+    "BpeModel": "functions.bpe",
+    "train_bpe": "functions.bpe",
+    "novel_docs": "operators.dedup",
+    "seen_hashes": "operators.dedup",
+    "semantic_dedup": "operators.dedup",
+    "semantic_dup_pairs": "operators.dedup",
+    "crawl_schedule": "operators.crawl",
+    "kmeans_fit": "operators.clustering",
+    "ENGLISH_LM": "functions.charlm",
+    "perplexity_expr": "functions.charlm",
+    "train_char_lm": "functions.charlm",
+    "clean_corpus": "pipelines",
+    "corpus_report": "pipelines",
+    "extract_anchor_texts": "operators.linkgraph",
+    "extract_links": "operators.linkgraph",
+    "host_graph": "operators.linkgraph",
+    "pagerank": "operators.linkgraph",
+    "top_anchor_texts": "operators.linkgraph",
+    "filter_blocklist": "operators.crawl",
+    "meta_robots": "operators.crawl",
+    "reference_meta_robots": "operators.crawl",
+    "reference_robots_allowed": "operators.crawl",
+    "reference_robots_crawl_delay": "operators.crawl",
+    "reference_robots_rules": "operators.crawl",
+    "reference_robots_sitemaps": "operators.crawl",
+    "reference_sitemap_entries": "operators.crawl",
+    "robots_allowed_expr": "operators.crawl",
+    "robots_crawl_delay": "operators.crawl",
+    "robots_filter": "operators.crawl",
+    "robots_matchable": "operators.crawl",
+    "robots_rules": "operators.crawl",
+    "robots_sitemaps": "operators.crawl",
+    "robots_txt_filter": "operators.crawl",
+    "robots_txt_rules": "operators.crawl",
+    "sitemap_entries": "operators.crawl",
+    "sitemap_urls": "operators.crawl",
+    "SnapshotStore": "sources.snapshots",
+}
+
+
+def __getattr__(name):
+    module = _LAZY.get(name)
+    if module is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    import importlib
+
+    value = getattr(importlib.import_module(f".{module}", __name__), name)
+    globals()[name] = value
+    return value
+
 
 __all__ = [
     "RECOMMENDED_CONF",
@@ -200,9 +200,6 @@ __all__ = [
     "train_bpe",
     "BpeModel",
     "EXAMPLE_BPE",
-    "QualityClassifier",
-    "fit_quality_classifier",
-    "EXAMPLE_QUALITY",
     "novel_docs",
     "seen_hashes",
     "semantic_dedup",
@@ -212,8 +209,6 @@ __all__ = [
     "ENGLISH_LM",
     "perplexity_expr",
     "train_char_lm",
-    "read_warc",
-    "split_warc_records",
     "clean_corpus",
     "corpus_report",
     "contamination_stats",
@@ -237,18 +232,6 @@ __all__ = [
     "robots_rules",
     "robots_txt_filter",
     "robots_txt_rules",
-    "DsirModel",
-    "TfidfModel",
-    "fit_tfidf",
-    "fit_tfidf_python",
-    "sparse_cosine",
-    "tfidf_topk",
-    "bucket_counts",
-    "dsir_bucket_ids",
-    "dsir_resample",
-    "dsir_weight_udf",
-    "fit_dsir",
-    "fit_dsir_python",
     "reference_robots_crawl_delay",
     "reference_robots_sitemaps",
     "reference_sitemap_entries",

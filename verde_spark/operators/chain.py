@@ -48,14 +48,10 @@ class Chain(BaseGridder):
         self.region_ = get_region(df, easting, northing)
         current = df
         for name, step in self.steps:
-            try:
-                current = step.filter(
-                    current, data_col=data_col, weight_col=weight_col,
-                    easting=easting, northing=northing,
-                )
-            except TypeError:
-                # decimators (BlockReduce/BlockMean wrappers) take fewer kwargs
-                current = step.filter(current)
+            current = step.filter(
+                current, data_col=data_col, weight_col=weight_col,
+                easting=easting, northing=northing,
+            )
             # decimators emit fresh weights named weight_<data_col>
             if f"weight_{data_col}" in current.columns and weight_col != f"weight_{data_col}":
                 weight_col = f"weight_{data_col}"

@@ -60,8 +60,6 @@ def clean_corpus(
     c4_badwords=None,
     max_perplexity: float | None = None,
     novel_against: DataFrame | None = None,
-    classifier=None,
-    min_classifier_score: float = 0.0,
     lm=None,
 ) -> DataFrame:
     """Standard crawl-cleaning recipe; see module docstring.
@@ -188,16 +186,6 @@ def clean_corpus(
         # are kept (no signal ≠ bad signal).
         ppl = perplexity_expr(lm or ENGLISH_LM, text_col)
         out = out.filter(ppl.isNull() | (ppl <= F.lit(float(max_perplexity))))
-    if classifier is not None:
-        # discriminative quality gate (operators/quality): keep docs the
-        # trained classifier scores at/above the LOGIT threshold (logit
-        # is monotone in probability and needs no engine-side exp).
-        # Pure literal-fold projection — same codegen'd gate stage;
-        # unscorable (NULL) texts are kept, the LM-gate convention.
-        s = classifier.score_expr(text_col)
-        out = out.filter(
-            s.isNull() | (s >= F.lit(float(min_classifier_score)))
-        )
     if gopher:
         from .functions.text import passes_gopher
 

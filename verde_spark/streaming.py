@@ -125,8 +125,6 @@ def streaming_clean_corpus(
     max_perplexity: float | None = None,
     lm=None,
     novel_against: DataFrame | None = None,
-    classifier=None,
-    min_classifier_score: float = 0.0,
     normalize_dedup: bool = False,
 ) -> DataFrame:
     """The crawl-cleaning recipe as a continuous query — the streaming
@@ -213,13 +211,6 @@ def streaming_clean_corpus(
         ppl = perplexity_expr(lm or ENGLISH_LM, text_col)
         gated = gated.filter(
             ppl.isNull() | (ppl <= F.lit(float(max_perplexity)))
-        )
-    if classifier is not None:
-        # stateless literal-fold projection, same as the batch recipe's
-        # discriminative gate (logit threshold; NULL scores kept)
-        s = classifier.score_expr(text_col)
-        gated = gated.filter(
-            s.isNull() | (s >= F.lit(float(min_classifier_score)))
         )
     if gopher:
         from .functions.text import passes_gopher
