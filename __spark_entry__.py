@@ -114,7 +114,7 @@ def entry(spark: SparkSession) -> DataFrame:
     sf_dir = "/root/testdata/sf0.001"
     pts = _points(spark, sf_dir)
     # decimate (one shuffle, algebraic agg), then the fused per-tile
-    # solve+evaluate cogroup (one Python stage, tested exactly equal to the
+    # solve+evaluate grouped pass (one Python stage, tested exactly equal to the
     # two-pass fit().grid() path)
     dec, _ = block_mean(pts, spacing=0.5, region=REGION, sort=False)
     return spline_solve_grid(

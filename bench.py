@@ -105,7 +105,7 @@ def pages_parquet(spark, n_pages: int) -> str:
 def _pipeline(spark, pages, spacing, tile_spacing, halo, shape):
     """pages → geotag → cell block-mean → tiled spline → grid.  The full
     EP2-shaped pipeline the north rule names: one shuffle for the
-    decimation, one cogroup for the per-tile solves + prediction."""
+    decimation, one grouped pass for the per-tile solves + prediction."""
     from pyspark.sql import functions as F
 
     from verde_spark import block_mean

@@ -174,6 +174,29 @@ def test_knn_broadcast_is_one_map_over_queries(spark):
     assert "Scan ExistingRDD" not in plan
 
 
+def test_spline_solve_grid_one_grouped_pass(spark):
+    from verde_spark.operators.spline import spline_solve_grid
+
+    rng = np.random.RandomState(1)
+    data = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "easting": rng.uniform(0, 10, 200),
+                "northing": rng.uniform(0, 10, 200),
+                "scalars": rng.normal(size=200),
+            }
+        )
+    )
+    plan = _plan(
+        spline_solve_grid(data, region=(0, 10, 0, 10), shape=(20, 20), tile_spacing=5.0)
+    )
+    # the kernel makes its tile's grid nodes: the points (plus one
+    # sentinel row per tile) reach Python in ONE grouped pass, with no
+    # node table to shuffle and cogroup
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert "FlatMapCoGroupsInPandas" not in plan
+
+
 def test_text_scoring_single_stage_no_python(spark, pages_parquet):
     """lang_id_expr / quality_score / token counts are pure Catalyst
     projections: no exchange, no Python eval — one codegen'd scan stage."""

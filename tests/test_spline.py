@@ -48,7 +48,7 @@ def test_spline_weights_outlier(spark):
 
 
 def test_spline_solve_grid_fused_matches_two_pass(spark):
-    # the fused single-cogroup path must equal fit().grid() exactly
+    # the fused single grouped pass must equal fit().grid() exactly
     from verde_spark.operators.spline import spline_solve_grid
 
     region = (100, 500, -800, -700)
@@ -180,3 +180,79 @@ def test_spline_solve_grid_custom_coordinate_names(spark):
     )
     assert list(got.columns) == ["iy", "ix", "lat", "lon", "pred"]
     npt.assert_allclose(got["pred"], want["pred"], rtol=1e-12)
+
+
+def _checker_points(spark, region, size, seed):
+    synth = CheckerBoard(region=region)
+    east, north, scalars = synth.scatter_numpy(size=size, random_state=seed)
+    pdf = pd.DataFrame({"easting": east, "northing": north, "scalars": scalars})
+    return pdf, spark.createDataFrame(pdf).cache()
+
+
+def test_spline_force_coords_single_tile_matches_numpy(spark):
+    # forces away from the data: one rectangular solve, equal to the
+    # direct NumPy Jacobian + least squares of the whole table
+    from verde_spark.lstsq import least_squares
+    from verde_spark.operators.spline import spline_jacobian, spline_predict
+
+    # undamped, 16 forces for 300 points: well enough conditioned that the
+    # order rows reach the tile moves the result by about 2e-11
+    region = (0, 10, 0, 10)
+    pdf, data = _checker_points(spark, region, 300, 11)
+    fe, fn = np.meshgrid(np.linspace(0.5, 9.5, 4), np.linspace(0.7, 9.3, 4))
+    fe, fn = fe.ravel(), fn.ravel()
+    spline = Spline(force_coords=(fe, fn)).fit(data)
+    got = spline.predict(data, "pred").toPandas().sort_values(["easting", "northing"])
+    east, north = pdf["easting"].to_numpy(), pdf["northing"].to_numpy()
+    jac = spline_jacobian(east, north, fe, fn)
+    forces = least_squares(jac, pdf["scalars"].to_numpy())
+    want = spline_predict(
+        got["easting"].to_numpy(), got["northing"].to_numpy(), fe, fn, forces
+    )
+    npt.assert_allclose(got["pred"].to_numpy(), want, rtol=1e-10)
+
+
+def test_spline_force_coords_at_data_equals_square_tiled(spark):
+    # forces placed on the data points: the cogrouped rectangular path
+    # solves the same per-tile systems as the square path
+    region = (0, 100, 0, 100)
+    pdf, data = _checker_points(spark, region, 400, 12)
+    kwargs = dict(damping=1e-6, tile_spacing=50.0, halo=20.0)
+    square = Spline(**kwargs).fit(data, region=region)
+    rect = Spline(
+        force_coords=(pdf["easting"].to_numpy(), pdf["northing"].to_numpy()), **kwargs
+    ).fit(data, region=region)
+    nodes = grid_coordinates(spark, region, shape=(9, 9))
+    want = square.predict(nodes, "pred").orderBy("iy", "ix").toPandas()
+    got = rect.predict(nodes, "pred").orderBy("iy", "ix").toPandas()
+    assert not want["pred"].isna().any()
+    npt.assert_allclose(got["pred"], want["pred"], rtol=1e-12)
+
+
+@pytest.mark.parametrize(
+    "shape, easting, northing",
+    [((9, 9), "easting", "northing"), ((17, 33), "easting", "northing"), ((9, 9), "lon", "lat")],
+)
+def test_spline_solve_grid_node_set_is_grid_coordinates(spark, shape, easting, northing):
+    # nodes made inside the tile kernel: these shapes put nodes exactly on
+    # tile edges, so each must land in exactly one tile, bit-identical to
+    # the grid_coordinates table
+    from verde_spark.operators.spline import spline_solve_grid
+
+    region = (0, 400, 0, 400)
+    _, data = _checker_points(spark, region, 500, 13)
+    data = data.select(
+        F.col("easting").alias(easting), F.col("northing").alias(northing), "scalars"
+    )
+    got = spline_solve_grid(
+        data, region=region, shape=shape, tile_spacing=100.0, damping=1e-8,
+        easting=easting, northing=northing,
+    ).toPandas()
+    cols = ["iy", "ix", easting, northing]
+    want = grid_coordinates(spark, region, shape=shape, easting=easting, northing=northing)
+    want = want.toPandas()[cols].sort_values(["iy", "ix"]).reset_index(drop=True)
+    assert len(got) == len(want) == shape[0] * shape[1]
+    assert not got.duplicated(["iy", "ix"]).any()
+    got = got[cols].sort_values(["iy", "ix"]).reset_index(drop=True)
+    for col in cols:
+        npt.assert_array_equal(got[col].to_numpy(), want[col].to_numpy())

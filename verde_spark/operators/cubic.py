@@ -44,7 +44,7 @@ from ..coordinates import BlockGrid
 from ..base import BaseGridder
 from ..geometry import get_region
 from .linear import delaunay
-from .spline import _halo_explode
+from .spline import _halo_explode, _tile_grid
 
 
 def estimate_gradients(
@@ -273,12 +273,7 @@ class Cubic(BaseGridder):
         region=None,
     ) -> "Cubic":
         self.region_ = region if region is not None else get_region(df, easting, northing)
-        if self.tile_spacing is None:
-            self.tile_grid_ = BlockGrid.from_region(self.region_, shape=(1, 1))
-            pad = 0.0
-        else:
-            self.tile_grid_ = BlockGrid.from_region(self.region_, spacing=self.tile_spacing)
-            pad = self.halo if self.halo is not None else self.tile_spacing / 2
+        self.tile_grid_, pad = _tile_grid(self.region_, self.tile_spacing, self.halo)
         pts = df.select(
             F.col(easting).alias("easting"),
             F.col(northing).alias("northing"),

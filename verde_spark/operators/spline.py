@@ -6,31 +6,32 @@ process, ~10^4-point ceiling. Here the plane is partitioned into square
 tiles; each tile solves its own damped least-squares system over the
 points of the tile **plus a halo** of neighboring points (so predictions
 are seamless across tile boundaries), inside an Arrow-batched
-``applyInPandas``. Prediction cogroups grid nodes with their tile's force
-table and evaluates the Green's sum with NumPy broadcasting (the exact
-``jacobian_numpy``/``predict_numpy`` formulas, spline.py:608-626).
+``applyInPandas``. ``Spline.predict`` cogroups nodes with their tile's
+force table and evaluates the Green's sum with NumPy broadcasting (the
+exact ``jacobian_numpy``/``predict_numpy`` formulas, spline.py:608-626).
 
 Scale story: tile size caps every dense solve at a configured force
-budget; the only shuffles are (1) groupBy(tile) of halo-exploded points
-and (2) cogroup of nodes with forces — both keyed by the same tile label,
-and the halo explode is a bounded ≤4× row multiplier (pad < tile size).
-With block-reduced inputs (one point per cell) a 10^12-row table becomes
-~n_cells forces spread over tiles that each fit comfortably in executor
-memory. Single-tile mode (``tile_spacing=None``) reproduces the reference
-exactly and is the parity-test regime.
+budget. The fused grid (``spline_solve_grid``) is ONE grouped pass over
+the halo-exploded points (a bounded ≤4× row multiplier, pad < tile
+size); its kernel makes the tile's grid nodes from ``region``/``shape``,
+so no node table is shuffled. With block-reduced inputs (one point per
+cell) a 10^12-row table becomes ~n_cells forces spread over tiles that
+each fit comfortably in executor memory. Single-tile mode
+(``tile_spacing=None``) reproduces the reference exactly and is the
+parity-test regime.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Optional, Sequence, Tuple
+from typing import Callable, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..coordinates import BlockGrid
+from ..coordinates import BlockGrid, _resolve_axes
 from ..base import BaseGridder
 from ..geometry import get_region
 from ..lstsq import least_squares
@@ -88,40 +89,68 @@ def spline_predict(
     return out
 
 
+def _tile_grid(
+    region: Sequence[float], tile_spacing: Optional[float], halo: Optional[float]
+) -> Tuple[BlockGrid, float]:
+    """(tiling grid, halo pad): one unpadded tile when *tile_spacing* is None,
+    else square tiles padded by *halo* (default half a tile)."""
+    if tile_spacing is None:
+        return BlockGrid.from_region(region, shape=(1, 1)), 0.0
+    pad = halo if halo is not None else tile_spacing / 2
+    return BlockGrid.from_region(region, spacing=tile_spacing), pad
+
+
 def _halo_explode(
-    df: DataFrame,
-    grid: BlockGrid,
-    pad: float,
-    easting: str,
-    northing: str,
+    df: DataFrame, grid: BlockGrid, pad: float, easting: str, northing: str
 ) -> DataFrame:
     """Duplicate each point into every tile whose *padded* extent contains it.
 
     The halo-exchange primitive (SURVEY §4.2 / verde rolling_window
     semantics, coordinates.py:947-1202): candidate tile indices are the
-    clamped floor-division indices of (coord ± pad) — a ≤(2×2) integer
-    range, exploded via ``sequence`` (pure Catalyst, no UDF).
+    block indices of (coord ± pad) — a ≤(2×2) integer range, exploded via
+    ``sequence`` (pure Catalyst, no UDF).
     """
-    e, n = F.col(easting), F.col(northing)
-    ex = grid.east
-    nx = grid.north
-    e_edge, n_edge = ex.start - ex.step / 2, nx.start - nx.step / 2
-
-    def idx(coord, axis, edge):
-        raw = F.floor((coord - F.lit(edge)) / F.lit(axis.step)).cast("long")
-        return F.least(F.lit(axis.size - 1), F.greatest(F.lit(0), raw))
-
-    ix_min = idx(e - F.lit(pad), ex, e_edge)
-    ix_max = idx(e + F.lit(pad), ex, e_edge)
-    iy_min = idx(n - F.lit(pad), nx, n_edge)
-    iy_max = idx(n + F.lit(pad), nx, n_edge)
-    out = (
-        df.withColumn("__ix", F.explode(F.sequence(ix_min, ix_max)))
-        .withColumn("__iy", F.explode(F.sequence(iy_min, iy_max)))
+    e, n, p = F.col(easting), F.col(northing), F.lit(pad)
+    ix = F.sequence(grid._index_expr(e - p, grid.east), grid._index_expr(e + p, grid.east))
+    iy = F.sequence(grid._index_expr(n - p, grid.north), grid._index_expr(n + p, grid.north))
+    return (
+        df.withColumn("__ix", F.explode(ix))
+        .withColumn("__iy", F.explode(iy))
         .withColumn("tile", F.col("__iy") * F.lit(grid.n_east) + F.col("__ix"))
         .drop("__ix", "__iy")
     )
-    return out
+
+
+def _tile_points(
+    df: DataFrame, grid: BlockGrid, pad: float, data_col: str,
+    weight_col: Optional[str], easting: str, northing: str,
+) -> DataFrame:
+    """Halo-exploded ``(easting, northing, data, weight, tile)`` solve input;
+    ``weight`` is null when no *weight_col* is given."""
+    pts = df.select(
+        F.col(easting).alias("easting"),
+        F.col(northing).alias("northing"),
+        F.col(data_col).alias("data"),
+        (F.col(weight_col) if weight_col else F.lit(None).cast("double")).alias("weight"),
+    )
+    return _halo_explode(pts, grid, pad, "easting", "northing")
+
+
+def _tile_forces(
+    points: pd.DataFrame, force_east: np.ndarray, force_north: np.ndarray,
+    damping: Optional[float], mindist: float,
+) -> np.ndarray:
+    """Damped least-squares forces of one tile — the one per-tile solve.
+
+    *points* has the ``_tile_points`` columns; all-null weights mean an
+    unweighted fit, and a null weight among present ones counts as 1.
+    """
+    w = points["weight"].to_numpy("float64")
+    weights = None if np.isnan(w).all() else np.nan_to_num(w, nan=1.0)
+    east = points["easting"].to_numpy("float64")
+    north = points["northing"].to_numpy("float64")
+    jac = spline_jacobian(east, north, force_east, force_north, mindist)
+    return least_squares(jac, points["data"].to_numpy("float64"), weights, damping)
 
 
 class Spline(BaseGridder):
@@ -169,21 +198,9 @@ class Spline(BaseGridder):
         # worth it when the caller already knows the bounds (verde also
         # accepts a region through grid()/CV paths)
         self.region_ = region if region is not None else get_region(df, easting, northing)
-        if self.tile_spacing is None:
-            # One tile covering everything: grid with a single block.
-            self.tile_grid_ = BlockGrid.from_region(self.region_, shape=(1, 1))
-            pad = 0.0
-        else:
-            self.tile_grid_ = BlockGrid.from_region(self.region_, spacing=self.tile_spacing)
-            pad = self.halo if self.halo is not None else self.tile_spacing / 2
+        self.tile_grid_, pad = _tile_grid(self.region_, self.tile_spacing, self.halo)
         grid = self.tile_grid_
-        pts = df.select(
-            F.col(easting).alias("easting"),
-            F.col(northing).alias("northing"),
-            F.col(data_col).alias("data"),
-            (F.col(weight_col) if weight_col else F.lit(None).cast("double")).alias("weight"),
-        )
-        exploded = _halo_explode(pts, grid, pad, "easting", "northing")
+        exploded = _tile_points(df, grid, pad, data_col, weight_col, easting, northing)
 
         damping, mindist = self.damping, self.mindist
         schema = T.StructType(
@@ -198,17 +215,12 @@ class Spline(BaseGridder):
         def solve(pdf: pd.DataFrame) -> pd.DataFrame:
             east = pdf["easting"].to_numpy("float64")
             north = pdf["northing"].to_numpy("float64")
-            data = pdf["data"].to_numpy("float64")
-            w = pdf["weight"].to_numpy("float64")
-            weights = None if np.isnan(w).all() else np.nan_to_num(w, nan=1.0)
-            jac = spline_jacobian(east, north, east, north, mindist)
-            forces = least_squares(jac, data, weights, damping)
             return pd.DataFrame(
                 {
                     "tile": pdf["tile"].iloc[0],
                     "force_east": east,
                     "force_north": north,
-                    "force": forces,
+                    "force": _tile_forces(pdf, east, north, damping, mindist),
                 }
             )
 
@@ -229,27 +241,16 @@ class Spline(BaseGridder):
 
         def solve_rect(key, data_pdf: pd.DataFrame, force_pdf: pd.DataFrame):
             if len(force_pdf) == 0 or len(data_pdf) == 0:
-                return pd.DataFrame(
-                    {"tile": [], "force_east": [], "force_north": [], "force": []}
-                ).astype(
-                    {"tile": "int64", "force_east": "float64",
-                     "force_north": "float64", "force": "float64"}
-                )
-            east = data_pdf["easting"].to_numpy("float64")
-            north = data_pdf["northing"].to_numpy("float64")
-            data = data_pdf["data"].to_numpy("float64")
-            w = data_pdf["weight"].to_numpy("float64")
-            weights = None if np.isnan(w).all() else np.nan_to_num(w, nan=1.0)
+                empty = pd.DataFrame(columns=schema.fieldNames(), dtype="float64")
+                return empty.astype({"tile": "int64"})
             f_east = force_pdf["easting"].to_numpy("float64")
             f_north = force_pdf["northing"].to_numpy("float64")
-            jac = spline_jacobian(east, north, f_east, f_north, mindist)
-            forces = least_squares(jac, data, weights, damping)
             return pd.DataFrame(
                 {
                     "tile": key[0],
                     "force_east": f_east,
                     "force_north": f_north,
-                    "force": forces,
+                    "force": _tile_forces(data_pdf, f_east, f_north, damping, mindist),
                 }
             )
 
@@ -323,87 +324,59 @@ class Spline(BaseGridder):
         return pred.withColumn(data_col, F.col(data_col) - F.col("__pred")).drop("__pred")
 
 
-def _solve_grid_parts(
-    df: DataFrame,
-    region: Sequence[float],
-    shape,
-    tile_spacing: float,
-    halo: Optional[float],
-    damping: Optional[float],
-    mindist: float,
-    data_col: str,
-    weight_col: Optional[str],
-    easting: str,
-    northing: str,
-    output_col: str,
-    keep_tile: bool,
-):
-    """Shared setup of the fused solve+grid: (exploded points, labeled
-    nodes, cogroup body, output schema)."""
-    from ..coordinates import grid_coordinates
+def _fused_plan(
+    df: DataFrame, region: Sequence[float], shape, tile_spacing: float,
+    halo: Optional[float], damping: Optional[float], mindist: float, data_col: str,
+    weight_col: Optional[str], easting: str, northing: str, output_col: str,
+) -> Tuple[DataFrame, Callable[[DataFrame], DataFrame]]:
+    """``(inputs, stage)`` of the fused solve+grid.
 
-    spark = df.sparkSession
-    grid = BlockGrid.from_region(region, spacing=tile_spacing)
-    pad = halo if halo is not None else tile_spacing / 2
-    pts = df.select(
-        F.col(easting).alias("easting"),
-        F.col(northing).alias("northing"),
-        F.col(data_col).alias("data"),
-        (F.col(weight_col) if weight_col else F.lit(None).cast("double")).alias("weight"),
-    )
-    exploded = _halo_explode(pts, grid, pad, "easting", "northing").select(
-        "tile", "easting", "northing", "data", "weight"
-    )
-    # forward the caller's coordinate names: the node table, the tile
-    # label and solve_and_eval's nds[easting]/nds[northing] reads all
-    # use them (defaults-only nodes made the easting=/northing=
-    # parameters crash on UNRESOLVED_COLUMN)
-    nodes = grid_coordinates(
-        spark, region, shape=shape, easting=easting, northing=northing
-    ).withColumn("tile", grid.label_expr(easting, northing))
-    fields = [
-        T.StructField("iy", T.LongType()),
-        T.StructField("ix", T.LongType()),
-        T.StructField(northing, T.DoubleType()),
-        T.StructField(easting, T.DoubleType()),
-        T.StructField(output_col, T.DoubleType()),
-    ]
-    if keep_tile:
-        fields.insert(0, T.StructField("tile", T.LongType()))
-    schema = T.StructType(fields)
+    ``inputs``: the halo-exploded points plus one null-coordinate sentinel
+    row per tile (``spark.range``, no shuffle), so point-free tiles run too.
+    ``stage``: ONE ``groupBy(tile).applyInPandas`` whose kernel solves its
+    tile and evaluates it at the tile's grid nodes, made in NumPy with the
+    ``grid_coordinates`` axis values and the ``BlockGrid.label_expr`` tile
+    index.  Output ``tile, iy, ix, northing, easting, output_col``; NaN
+    predictions on point-free tiles.
+    """
+    grid, pad = _tile_grid(region, tile_spacing, halo)
+    nulls = [F.lit(None).cast("double").alias(c) for c in ("easting", "northing", "data", "weight")]
+    sentinels = df.sparkSession.range(grid.n_blocks).select(F.col("id").alias("tile"), *nulls)
+    points = _tile_points(df, grid, pad, data_col, weight_col, easting, northing)
+    inputs = points.unionByName(sentinels)
 
-    def solve_and_eval(key, points: pd.DataFrame, nds: pd.DataFrame) -> pd.DataFrame:
-        if keep_tile:
-            nds = nds.copy()
+    node_east, node_north = (axis.values() for axis in _resolve_axes(region, shape))
+
+    def tile_index(values: np.ndarray, axis) -> np.ndarray:
+        # NumPy twin of BlockGrid._index_expr
+        raw = np.floor((values - (axis.start - axis.step / 2)) / axis.step)
+        return np.clip(raw, 0, axis.size - 1).astype("int64")
+
+    tile_ix, tile_iy = tile_index(node_east, grid.east), tile_index(node_north, grid.north)
+    schema = T.StructType(
+        [T.StructField(c, T.LongType()) for c in ("tile", "iy", "ix")]
+        + [T.StructField(c, T.DoubleType()) for c in (northing, easting, output_col)]
+    )
+
+    def solve_grid(pdf: pd.DataFrame) -> pd.DataFrame:
+        tile = int(pdf["tile"].iloc[0])
+        ty, tx = divmod(tile, grid.n_east)
+        rows, cols = np.flatnonzero(tile_iy == ty), np.flatnonzero(tile_ix == tx)
+        iy, ix = np.repeat(rows, cols.size), np.tile(cols, rows.size)  # row-major
+        east, north = node_east[ix], node_north[iy]
+        points = pdf[pdf["easting"].notna()]
+        if len(points) == 0 or len(iy) == 0:
+            pred = np.full(len(iy), np.nan)
         else:
-            nds = nds.drop(columns=["tile"]).copy()
-        if len(nds) == 0:
-            nds[output_col] = pd.Series(dtype="float64")
-            return nds
-        # the resumable path pads every tile with one null-coordinate
-        # sentinel row so point-free tiles still run (and emit NaN nodes)
-        points = points[points["easting"].notna()]
-        if len(points) == 0:
-            nds[output_col] = np.nan
-            return nds
-        east = points["easting"].to_numpy("float64")
-        north = points["northing"].to_numpy("float64")
-        data = points["data"].to_numpy("float64")
-        w = points["weight"].to_numpy("float64")
-        weights = None if np.isnan(w).all() else np.nan_to_num(w, nan=1.0)
-        jac = spline_jacobian(east, north, east, north, mindist)
-        forces = least_squares(jac, data, weights, damping)
-        nds[output_col] = spline_predict(
-            nds[easting].to_numpy("float64"),
-            nds[northing].to_numpy("float64"),
-            east,
-            north,
-            forces,
-            mindist,
+            p_east = points["easting"].to_numpy("float64")
+            p_north = points["northing"].to_numpy("float64")
+            forces = _tile_forces(points, p_east, p_north, damping, mindist)
+            pred = spline_predict(east, north, p_east, p_north, forces, mindist)
+        return pd.DataFrame(
+            {"tile": tile, "iy": iy, "ix": ix, northing: north, easting: east, output_col: pred}
         )
-        return nds
 
-    return exploded, nodes, solve_and_eval, schema
+    return inputs, lambda tiles: tiles.groupBy("tile").applyInPandas(solve_grid, schema)
 
 
 def spline_solve_grid(
@@ -420,24 +393,22 @@ def spline_solve_grid(
     northing: str = "northing",
     output_col: str = "prediction",
 ) -> DataFrame:
-    """Fused per-tile solve + grid evaluation in ONE cogroup pass.
+    """Fused per-tile solve + grid evaluation in ONE grouped pass.
 
     ``Spline.fit().grid()`` materializes the force table between two Python
     stages; when the forces aren't reused, solving and predicting inside
     the same ``applyInPandas`` halves the Python-stage count and drops a
-    shuffle — the plan is scan → blockagg exchange → cogroup(points, nodes)
-    → output, with every stage embarrassingly parallel across tiles. This
-    is the throughput path the benchmark exercises.
+    shuffle.  The grid nodes are made inside the kernel, so no node table
+    is built, shuffled or sent to Python — the plan is scan → blockagg
+    exchange → groupBy(tile) of the halo-exploded points → output, with
+    every stage embarrassingly parallel across tiles.  This is the
+    throughput path the benchmark exercises.
     """
-    exploded, nodes, solve_and_eval, schema = _solve_grid_parts(
+    inputs, stage = _fused_plan(
         df, region, shape, tile_spacing, halo, damping, mindist,
-        data_col, weight_col, easting, northing, output_col, keep_tile=False,
+        data_col, weight_col, easting, northing, output_col,
     )
-    return (
-        exploded.groupBy("tile")
-        .cogroup(nodes.groupBy("tile"))
-        .applyInPandas(solve_and_eval, schema)
-    )
+    return stage(inputs).drop("tile")
 
 
 def spline_solve_grid_resumable(
@@ -458,12 +429,10 @@ def spline_solve_grid_resumable(
     """``spline_solve_grid`` with per-tile checkpoint/resume (north rule:
     "resumable from checkpoint with per-partition lineage + metrics").
 
-    The checkpoint unit is the tile, and the todo set covers EVERY tile of
-    the tiling grid — the halo-exploded point table is unioned with one
-    null-coordinate sentinel row per tile (``spark.range`` over the tile
-    count, no shuffle), so tiles that contain no data points still reach
-    the cogroup and emit their grid nodes with NaN predictions, exactly
-    like plain :func:`spline_solve_grid`.  Each tile's point group is
+    The checkpoint unit is the tile and the plan is the plain fused one:
+    its input already holds one sentinel row per tile, so the todo set
+    covers EVERY tile of the tiling grid and point-free tiles emit their
+    grid nodes with NaN predictions.  Each tile's point group is
     self-contained (halo rows are duplicated into it), so anti-joining
     completed tiles away loses nothing.  Completed tiles are read back
     from the checkpoint; only remaining tiles solve.  Output carries the
@@ -472,29 +441,9 @@ def spline_solve_grid_resumable(
     """
     from ..checkpoint import run_resumable
 
-    exploded, nodes, solve_and_eval, schema = _solve_grid_parts(
+    inputs, stage = _fused_plan(
         df, region, shape, tile_spacing, halo, damping, mindist,
-        data_col, weight_col, easting, northing, output_col, keep_tile=True,
+        data_col, weight_col, easting, northing, output_col,
     )
-    spark = df.sparkSession
-    tile_grid = BlockGrid.from_region(region, spacing=tile_spacing)
-    sentinels = spark.range(tile_grid.n_blocks).select(
-        F.col("id").alias("tile"),
-        *[
-            F.lit(None).cast("double").alias(c)
-            for c in ("easting", "northing", "data", "weight")
-        ],
-    )
-    inputs = exploded.unionByName(sentinels)
-
-    def stage(remaining: DataFrame) -> DataFrame:
-        todo_tiles = remaining.select("tile").distinct()
-        nds = nodes.join(F.broadcast(todo_tiles), "tile", "semi")
-        return (
-            remaining.groupBy("tile")
-            .cogroup(nds.groupBy("tile"))
-            .applyInPandas(solve_and_eval, schema)
-        )
-
     # count_col="easting": sentinel rows must not inflate rows_in lineage
-    return run_resumable(spark, inputs, stage, checkpoint_path, count_col="easting")
+    return run_resumable(df.sparkSession, inputs, stage, checkpoint_path, count_col="easting")

@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 from ..coordinates import BlockGrid
 from ..geometry import get_region
 from ..lstsq import least_squares
-from .spline import _halo_explode
+from .spline import _halo_explode, _tile_grid
 
 
 #: Reference default data names for vector components
@@ -238,12 +238,7 @@ class VectorSpline2D:
             raise ValueError(f"Need two data components. Only {len(data_cols)} given.")
         self.data_cols_ = tuple(data_cols)
         self.region_ = get_region(df, easting, northing)
-        if self.tile_spacing is None:
-            self.tile_grid_ = BlockGrid.from_region(self.region_, shape=(1, 1))
-            pad = 0.0
-        else:
-            self.tile_grid_ = BlockGrid.from_region(self.region_, spacing=self.tile_spacing)
-            pad = self.halo if self.halo is not None else self.tile_spacing / 2
+        self.tile_grid_, pad = _tile_grid(self.region_, self.tile_spacing, self.halo)
         grid = self.tile_grid_
         cols = [
             F.col(easting).alias("easting"),
