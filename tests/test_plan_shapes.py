@@ -61,6 +61,29 @@ def test_polygon_join_no_python_node(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+def test_zonal_stats_one_arrow_kernel(spark):
+    from verde_spark.operators.polygons import zonal_stats
+
+    rng = np.random.RandomState(2)
+    pts = spark.createDataFrame(
+        pd.DataFrame({"easting": rng.uniform(0, 10, 200), "northing": rng.uniform(0, 10, 200),
+                      "v": rng.normal(size=200)})
+    )
+    polys = spark.createDataFrame(
+        [(i, [{"x": x0, "y": 1.0}, {"x": x0 + 3.0, "y": 1.0}, {"x": x0 + 1.0, "y": 6.0}])
+         for i, x0 in enumerate([0.0, 2.0, 5.0])],
+        "poly_id long, vertices array<struct<x:double,y:double>>",
+    )
+    plan = _plan(zonal_stats(pts, polys, "v"))
+    # a small polygon side is a broadcast kernel: the coordinates pass
+    # through one Arrow UDF, its hits meet the polygon frame in a
+    # broadcast hash join, and the only shuffle is the aggregate's
+    assert plan.count("ArrowEvalPython") == 1
+    for node in ("BatchEvalPython", "BroadcastNestedLoopJoin", "SortMergeJoin", "CartesianProduct"):
+        assert node not in plan
+    assert plan.count("Exchange") - plan.count("BroadcastExchange") == 1
+
+
 def test_hash_split_no_exchange(spark):
     from verde_spark.operators.sampling import hash_split
 

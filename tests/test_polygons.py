@@ -7,7 +7,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from verde_spark.operators import neighbors, polygons
 from verde_spark.operators.polygons import (
+    PolygonIndex,
     point_in_polygon,
     point_in_polygon_expr,
     polygon_join,
@@ -49,7 +51,7 @@ def test_point_in_polygon_matches_reference(spark):
     np.testing.assert_array_equal(got, want[order])
 
 
-def test_polygon_join_methods_agree(spark):
+def test_polygon_join_methods_agree(spark, monkeypatch):
     rng = np.random.RandomState(1)
     pts = spark.createDataFrame(
         pd.DataFrame(
@@ -93,6 +95,17 @@ def test_polygon_join_methods_agree(spark):
     )
     assert len(a) > 10
     pd.testing.assert_frame_equal(a, b)
+    # both calls above take the broadcast kernel; force the cell-cover
+    # join so two distinct physical plans are compared
+    monkeypatch.setattr(polygons, "BROADCAST_THRESHOLD", 0)
+    c = (
+        polygon_join(pts, polys, method="cells")
+        .select("pid", "poly_id")
+        .toPandas()
+        .sort_values(["pid", "poly_id"])
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(a, c)
 
 
 def test_polygon_join_semi_anti_partition(spark):
@@ -414,3 +427,157 @@ def test_degenerate_empty_polygon_contains_nothing(spark):
     )
     by_id = {r["poly_id"]: r["inside"] for r in got}
     assert by_id[1] is True and by_id[2] is False
+
+
+# ---------------------------------------------------------------------------
+# broadcast kernel (PolygonIndex) against brute force and the cell join
+# ---------------------------------------------------------------------------
+
+
+def _star_polygons(rng, n, region):
+    w, e, s, north = region
+    polys = []
+    for _ in range(n):
+        nv = rng.integers(3, 13)
+        ang = np.sort(rng.uniform(0, 2 * np.pi, nv))
+        rad = rng.uniform(0.5, 6.0, nv)
+        cx, cy = rng.uniform(w, e), rng.uniform(s, north)
+        polys.append([(cx + r * np.cos(a), cy + r * np.sin(a)) for a, r in zip(ang, rad)])
+    return polys
+
+
+@pytest.mark.parametrize("n_points,chunk", [(20_000, None), (2_000, 16)])
+def test_polygon_index_matches_brute_force(monkeypatch, n_points, chunk):
+    if chunk is not None:
+        # chunk boundaries now fall between one point's candidate polygons
+        monkeypatch.setattr(neighbors, "_CHUNK", chunk)
+    rng = np.random.default_rng(5)
+    polys = _star_polygons(rng, 200, (0.0, 100.0, 0.0, 100.0))
+    # degenerate entries: no vertex array, 0, 1 and 2 vertices, a null vertex
+    polys += [None, [], [(50.0, 50.0)], [(10.0, 10.0), (90.0, 90.0)],
+              [(40.0, 40.0), (None, None), (60.0, 40.0), (50.0, 60.0)]]
+    x = rng.uniform(-20, 120, n_points)  # some points outside every bbox
+    y = rng.uniform(-20, 120, n_points)
+    # points planted on vertices and at the middle of edges
+    verts = np.array([p for v in polys[:200] for p in v])
+    k = min(500, n_points // 4)
+    x[:k], y[:k] = verts[:k, 0], verts[:k, 1]
+    x[k:2 * k] = (verts[:k, 0] + verts[1:k + 1, 0]) / 2
+    y[k:2 * k] = (verts[:k, 1] + verts[1:k + 1, 1]) / 2
+    x[2 * k], y[2 * k + 1] = np.nan, np.nan
+
+    offsets, poly = PolygonIndex(polys).contains(x, y)
+    assert offsets[0] == 0 and offsets[-1] == len(poly) and (np.diff(offsets) >= 0).all()
+    got_point = np.repeat(np.arange(n_points), np.diff(offsets))
+    want = []
+    for i, v in enumerate(polys):
+        if v is not None and len(v) >= 2:
+            inside = pnpoly(x, y, np.array(v, "float64"))
+            want += [(j, i) for j in np.flatnonzero(inside)]
+    want = np.array(want).reshape(-1, 2)
+    want = want[np.lexsort((want[:, 1], want[:, 0]))]
+    # already in point order with polygons ascending
+    np.testing.assert_array_equal(got_point, want[:, 0])
+    np.testing.assert_array_equal(poly, want[:, 1])
+    assert len(want) > n_points // 10  # the fixture discriminates
+    assert np.diff(offsets).max() >= 2  # overlapping polygons
+
+
+def test_polygon_index_empty_and_no_candidates():
+    offsets, poly = PolygonIndex([]).contains([0.0, np.nan], [0.0, 1.0])
+    np.testing.assert_array_equal(offsets, [0, 0, 0])
+    assert len(poly) == 0
+    index = PolygonIndex([[(0.0, 0.0), (1.0, 0.0), (0.0, 1.0)]], cell_spacing=0.1)
+    offsets, poly = index.contains(np.zeros(0), np.zeros(0))
+    np.testing.assert_array_equal(offsets, [0])
+    offsets, poly = index.contains([0.2, 5.0, -1e300, np.inf], [0.2, 5.0, 0.2, 0.2])
+    np.testing.assert_array_equal(offsets, [0, 1, 1, 1, 1])
+    np.testing.assert_array_equal(poly, [0])
+
+
+SQUARE = [(10.0, 0.0), (12.0, 0.0), (12.0, 2.0), (10.0, 2.0)]
+OVERLAP = ([(20.0, 0.0), (24.0, 0.0), (24.0, 4.0), (20.0, 4.0)],
+           [(22.0, 2.0), (26.0, 1.0), (25.0, 6.0)])
+
+
+@pytest.fixture(scope="module")
+def parity_tables(spark):
+    """Polygons with edge cases and points planted on them."""
+    polys = [
+        (0, ARROW), (1, SQUARE), (2, OVERLAP[0]), (3, OVERLAP[1]),
+        (4, []), (5, [(1.0, 1.0)]), (6, [(0.0, 0.0), (30.0, 6.0)]), (7, None),
+    ]
+    poly_df = spark.createDataFrame(
+        [(i, None if v is None else [{"x": float(a), "y": float(b)} for a, b in v])
+         for i, v in polys],
+        "poly_id long, vertices array<struct<x:double,y:double>>",
+    )
+    rng = np.random.RandomState(4)
+    pts = [(float(a), float(b)) for a, b in ARROW]  # vertices
+    for (ax, ay), (bx, by) in zip(ARROW, ARROW[1:] + ARROW[:1]):
+        for t in (0.25, 0.5, 0.75):  # on (or within rounding of) edges
+            pts.append((ax + t * (bx - ax), ay + t * (by - ay)))
+    # SQUARE's (1, 0) (inside) and (0.5, 2) (outside), shifted by 10
+    pts += [(11.0, 0.0), (10.5, 2.0), (10.0, 1.0), (12.0, 1.0), (11.0, 1.0)]
+    pts += [(23.0, 2.5), (22.0, 2.0), (1.0, 1.0), (15.0, 3.0)]
+    pts += [(float(a), float(b)) for a, b in zip(rng.uniform(-2, 27, 300), rng.uniform(-1, 7, 300))]
+    pts += [(float("nan"), 1.0), (11.0, float("nan")), (None, 1.0), (11.0, None)]
+    pt_df = spark.createDataFrame(
+        [(i, a, b, f"p{i}") for i, (a, b) in enumerate(pts)],
+        "pid long, easting double, northing double, tag string",
+    )
+    return pt_df, poly_df
+
+
+def _rows(df):
+    """Collected rows as sortable tuples, NaN made comparable."""
+    def norm(v):
+        return "nan" if isinstance(v, float) and v != v else v
+    return sorted((tuple(norm(v) for v in r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("how", ["inner", "semi", "anti"])
+@pytest.mark.parametrize("point_id", [None, "pid"])
+def test_broadcast_kernel_matches_cell_join(spark, monkeypatch, parity_tables, how, point_id):
+    pts, polys = parity_tables
+    kernel = polygon_join(pts, polys, how=how, point_id=point_id)
+    monkeypatch.setattr(polygons, "BROADCAST_THRESHOLD", 0)
+    cells = polygon_join(pts, polys, how=how, point_id=point_id)
+    assert "ArrowEvalPython" in kernel._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in cells._jdf.queryExecution().executedPlan().toString()
+    assert kernel.schema == cells.schema  # names, order, types, nullability
+    got, want = _rows(kernel), _rows(cells)
+    assert got == want
+    ids = {r[0] for r in got}
+    last = pts.count()
+    nulls = set(range(last - 4, last))  # the null and NaN coordinates
+    if how == "anti":
+        assert nulls <= ids  # null/NaN coordinates are outside every polygon
+    else:
+        assert not nulls & ids
+    if how == "inner":
+        pairs = {(r[0], r[4]) for r in got}
+        n0 = len(ARROW) * 4
+        assert (n0, 1) in pairs and (n0 + 1, 1) not in pairs  # (1, 0) in, (0.5, 2) out
+        assert (n0 + 5, 2) in pairs and (n0 + 5, 3) in pairs  # one point, two rows
+        assert not {p for _, p in pairs} & {4, 5, 6, 7}  # degenerate: nothing inside
+
+
+def test_empty_polygon_table(spark, monkeypatch):
+    from verde_spark.operators.polygons import rasterize, zonal_stats
+
+    pts = spark.createDataFrame(
+        pd.DataFrame({"easting": [0.5, 2.0], "northing": [0.5, 2.0], "v": [1.0, 2.0]})
+    )
+    empty = spark.createDataFrame(
+        [], "poly_id long, vertices array<struct<x:double,y:double>>"
+    )
+    assert polygon_join(pts, empty).count() == 0
+    assert polygon_join(pts, empty, how="anti").count() == 2
+    assert zonal_stats(pts, empty, "v").count() == 0
+    got = rasterize(empty.drop("poly_id"), (0.0, 1.0, 0.0, 1.0), shape=(3, 3),
+                    method="cells", fill=-1.0).toPandas()["value"]
+    assert len(got) == 9 and (got == -1.0).all()
+    monkeypatch.setattr(polygons, "BROADCAST_THRESHOLD", 0)
+    assert polygon_join(pts, empty).count() == 0
+    assert polygon_join(pts, empty, how="semi").count() == 0

@@ -57,6 +57,15 @@ def _expand(lo: np.ndarray, hi: np.ndarray) -> Tuple[np.ndarray, np.ndarray]:
     return seg, pos
 
 
+def _chunks(load: np.ndarray):
+    """``[a, b)`` runs of consecutive items, cut where the running *load*
+    crosses a multiple of :data:`_CHUNK`; an item heavier than that runs
+    alone."""
+    chunk = (np.cumsum(load) - load) // _CHUNK
+    cuts = [0, *(np.flatnonzero(np.diff(chunk)) + 1), len(load)]
+    return zip(cuts[:-1], cuts[1:])
+
+
 def _index_cell_size(width: float, height: float, n: int, k: int) -> float:
     """Square cell holding about k of n points spread over the bbox; the
     second term keeps cells finite for (near-)collinear data."""
@@ -137,10 +146,8 @@ class CellIndex:
         while pending.size:
             query, lo, hi = self._ring_segments(qx[pending], qy[pending], ring[pending])
             load = np.bincount(query, weights=hi - lo, minlength=len(pending))
-            chunk = (np.cumsum(load) - load) // _CHUNK
-            cuts = [0, *(np.flatnonzero(np.diff(chunk)) + 1), len(pending)]
             left = []
-            for a, b in zip(cuts[:-1], cuts[1:]):
+            for a, b in _chunks(load):
                 s0, s1 = np.searchsorted(query, [a, b])
                 seg, point = _expand(lo[s0:s1], hi[s0:s1])
                 left.append(self._rank(pending[a:b], query[s0:s1][seg] - a, point,
