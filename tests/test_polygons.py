@@ -466,9 +466,16 @@ def test_polygon_index_matches_brute_force(monkeypatch, n_points, chunk):
     y[k:2 * k] = (verts[:k, 1] + verts[1:k + 1, 1]) / 2
     x[2 * k], y[2 * k + 1] = np.nan, np.nan
 
-    offsets, poly = PolygonIndex(polys).contains(x, y)
+    offsets = _assert_brute_force(PolygonIndex(polys), polys, x, y)
+    assert offsets[-1] > n_points // 10  # the fixture discriminates
+    assert np.diff(offsets).max() >= 2  # overlapping polygons
+
+
+def _assert_brute_force(index, polys, x, y):
+    """``index.contains`` equals PNPOLY over every polygon; the offsets."""
+    offsets, poly = index.contains(x, y)
     assert offsets[0] == 0 and offsets[-1] == len(poly) and (np.diff(offsets) >= 0).all()
-    got_point = np.repeat(np.arange(n_points), np.diff(offsets))
+    got_point = np.repeat(np.arange(len(x)), np.diff(offsets))
     want = []
     for i, v in enumerate(polys):
         if v is not None and len(v) >= 2:
@@ -479,8 +486,31 @@ def test_polygon_index_matches_brute_force(monkeypatch, n_points, chunk):
     # already in point order with polygons ascending
     np.testing.assert_array_equal(got_point, want[:, 0])
     np.testing.assert_array_equal(poly, want[:, 1])
-    assert len(want) > n_points // 10  # the fixture discriminates
-    assert np.diff(offsets).max() >= 2  # overlapping polygons
+    return offsets
+
+
+@pytest.mark.parametrize("case", ["one_large", "zero_width"])
+def test_polygon_index_cover_is_bounded(case):
+    rng = np.random.default_rng(6)
+    corners = rng.uniform(0, 40, (1000, 2))
+    if case == "one_large":
+        # the median width sets a 0.0025 cell: 2.6e8 cells for the square
+        polys = [[(a, b), (a + 0.01, b), (a, b + 0.01)] for a, b in corners]
+        polys.append([(0.0, 0.0), (40.0, 0.0), (40.0, 40.0), (0.0, 40.0)])
+    else:
+        # 1-vertex rows have no edge and no cover; vertical slits have a
+        # zero width, so the median width is 0 and the cell 1e-12
+        polys = [[(a, b)] for a, b in corners[:800]]
+        polys += [[(a, b), (a, b + 5.0)] for a, b in corners[800:990]]
+        polys += [[(a, b), (a + 3.0, b), (a, b + 3.0)] for a, b in corners[990:]]
+    index = PolygonIndex(polys)
+    covered = sum(v is not None and len(v) >= 2 for v in polys)
+    assert len(index.cell_poly) <= polygons._COVER * covered
+    x, y = rng.uniform(-5, 45, 5000), rng.uniform(-5, 45, 5000)
+    # inside the tiny triangles of the first case
+    x[:100], y[:100] = corners[:100, 0] + 0.002, corners[:100, 1] + 0.002
+    offsets = _assert_brute_force(index, polys, x, y)
+    assert offsets[-1] > 50
 
 
 def test_polygon_index_empty_and_no_candidates():
@@ -561,6 +591,22 @@ def test_broadcast_kernel_matches_cell_join(spark, monkeypatch, parity_tables, h
         assert (n0, 1) in pairs and (n0 + 1, 1) not in pairs  # (1, 0) in, (0.5, 2) out
         assert (n0 + 5, 2) in pairs and (n0 + 5, 3) in pairs  # one point, two rows
         assert not {p for _, p in pairs} & {4, 5, 6, 7}  # degenerate: nothing inside
+
+
+@pytest.mark.parametrize("bound", ["BROADCAST_THRESHOLD", "BROADCAST_VERTICES"])
+def test_side_over_either_bound_takes_cell_join(spark, monkeypatch, parity_tables, bound):
+    pts, polys = parity_tables
+    size = polys.select(
+        F.count(F.lit(1)) if bound == "BROADCAST_THRESHOLD"
+        else F.sum(F.greatest(F.size("vertices"), F.lit(0)))
+    ).first()[0]
+    monkeypatch.setattr(polygons, bound, size)
+    kernel = polygon_join(pts, polys, how="semi", point_id="pid")
+    monkeypatch.setattr(polygons, bound, size - 1)
+    cells = polygon_join(pts, polys, how="semi", point_id="pid")
+    assert "ArrowEvalPython" in kernel._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in cells._jdf.queryExecution().executedPlan().toString()
+    assert _rows(kernel) == _rows(cells)
 
 
 def test_empty_polygon_table(spark, monkeypatch):

@@ -21,11 +21,12 @@ evaluate the same formula in the same operation order:
 ``polygon_join`` picks its plan by the size of the polygon side:
 
 * **Broadcast kernel** — at most :data:`BROADCAST_THRESHOLD` polygons
-  (one limited collect decides, as for kNN), or always for
-  ``method="bbox"``.  The driver builds a :class:`PolygonIndex` and
-  broadcasts it; one scalar Arrow UDF over ``(easting, northing)`` returns
-  each point's containing-polygon list, so only the two coordinates cross
-  into Python and no row is interpreted.  ``inner`` explodes the list and
+  holding at most :data:`BROADCAST_VERTICES` vertices (the vertex counts
+  of a limited head decide, then the side is collected as Arrow).
+  The driver builds a :class:`PolygonIndex` and broadcasts it; one
+  scalar Arrow UDF over ``(easting, northing)`` returns each point's
+  containing-polygon list, so only the two coordinates cross into Python
+  and no row is interpreted.  ``inner`` explodes the list and
   broadcast-hash-joins a driver-built polygon frame; ``semi``/``anti``
   filter on the list's size.
 * **Cell-cover join** — larger polygon sides.  Cover each polygon's bbox
@@ -47,11 +48,29 @@ from typing import Optional, Sequence, Tuple
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .neighbors import BROADCAST_THRESHOLD, _chunks, _expand
+from .neighbors import _chunks, _expand
+
+#: Most rows and vertices of a polygon side that ``polygon_join`` collects
+#: and broadcasts; larger sides take the cell-cover join.  Measured with
+#: ``tools/polygon_crossover.py`` (100k points, 4 cores): the kernel used
+#: at most about two thirds of the cell join's CPU time at every size, and
+#: less wall time up to 50k polygons, the same at 100k and more at 200k,
+#: where its serial driver work dominates.  Its lead grows with the
+#: vertex count (up to 5.1M measured); the vertex bound holds the edge
+#: arrays of the driver's index, and of each worker's copy, to 64 MB.
+BROADCAST_THRESHOLD = 100_000
+BROADCAST_VERTICES = 2_000_000
+
+_VERTICES = pa.list_(pa.struct([("x", pa.float64()), ("y", pa.float64())]))
+
+# cells the broadcast index covers the polygon bboxes with, at most, per
+# covered polygon; a quarter-width cell covers a median bbox with 25-36
+_COVER = 64
 
 
 def polygon_literal(vertices: Sequence[Tuple[float, float]]) -> Column:
@@ -151,18 +170,28 @@ def _cell_cover(polys: DataFrame, cell_spacing: Optional[float]) -> Tuple[DataFr
 class PolygonIndex:
     """A polygon table on the driver: the broadcast side of ``polygon_join``.
 
-    ``vertices`` holds one vertex sequence of ``(x, y)`` pairs per polygon
-    (None, or a None coordinate, allowed).  Edges are kept in CSR form
+    ``vertices`` is a pyarrow ``list<struct<x, y>>`` array, one vertex
+    list per polygon, or a sequence of ``(x, y)`` lists that converts to
+    one (null lists, vertices and coordinates allowed; a null vertex or
+    coordinate reads as NaN).  Edges are kept in CSR form
     (``edge_start`` offsets into the ``ax, ay → bx, by`` arrays) with the
     closing wrap of ``_edges``; a polygon with fewer than 2 vertices has no
-    edge.  Square cells of side ``cell_spacing`` (default: the median bbox
-    width / 4) cover every bbox, stored as a cell → polygon CSR over the
-    sorted cell keys.
+    edge.  Square cells cover every bbox, stored as a cell → polygon CSR
+    over the sorted cell keys.  The cell side is ``cell_spacing`` (default:
+    the median bbox width / 4 over the polygons with an edge), doubled
+    until the cover holds at most ``_COVER`` cells per polygon.
     """
 
-    def __init__(self, vertices: Sequence, cell_spacing: Optional[float] = None):
-        count = np.array([0 if v is None else len(v) for v in vertices], "int64")
-        xy = np.array([p for v in vertices if v for p in v], "float64").reshape(-1, 2)
+    def __init__(self, vertices, cell_spacing: Optional[float] = None):
+        if isinstance(vertices, pa.ChunkedArray):
+            vertices = vertices.combine_chunks()
+        elif not isinstance(vertices, pa.Array):
+            vertices = pa.array(vertices, _VERTICES)
+        count = pc.list_value_length(vertices).fill_null(0).to_numpy().astype("int64")
+        flat = vertices.flatten()
+        xy = np.column_stack([
+            pc.struct_field(flat, c).cast(pa.float64()).to_numpy(zero_copy_only=False) for c in "xy"
+        ])
         first = np.cumsum(count) - count
         # bbox over the non-null vertices, as array_min/array_max
         nonempty = count > 0
@@ -180,23 +209,35 @@ class PolygonIndex:
         self.ax, self.ay = xy[a, 0], xy[a, 1]
         self.bx, self.by = xy[b, 0], xy[b, 1]
 
-        if cell_spacing is None:
-            cell_spacing = _default_spacing(self.xmax - self.xmin)
         covered = np.flatnonzero((edges > 0) & np.isfinite(box).all(axis=0))
+        if cell_spacing is None:
+            cell_spacing = _default_spacing(self.xmax[covered] - self.xmin[covered])
         self.cell = float(cell_spacing)
         # with nothing to cover the origin is inf and the grid empty, so
         # every point falls outside it
         self.west = float(self.xmin[covered].min(initial=np.inf))
         self.south = float(self.ymin[covered].min(initial=np.inf))
-        cx0, cx1 = (self._cells(c[covered], self.west).astype("int64") for c in (self.xmin, self.xmax))
-        cy0, cy1 = (self._cells(c[covered], self.south).astype("int64") for c in (self.ymin, self.ymax))
+        lo_hi = [self.xmin, self.xmax, self.ymin, self.ymax]
+        origin = [self.west, self.west, self.south, self.south]
+        while True:
+            cx0, cx1, cy0, cy1 = (self._cells(c[covered], o) for c, o in zip(lo_hi, origin))
+            cover = ((cx1 - cx0 + 1) * (cy1 - cy0 + 1)).sum()
+            extent = (cx1.max(initial=-1) + 1) * (cy1.max(initial=-1) + 1)
+            # one large polygon among many small ones, or a zero median
+            # width, would make the cover unbounded; a coarser cell only
+            # adds candidates, which the bbox filter drops
+            if not (cover > _COVER * len(covered) or extent > 2.0**62):
+                break
+            self.cell *= 2
+        cx0, cx1, cy0, cy1 = (c.astype("int64") for c in (cx0, cx1, cy0, cy1))
         self.nx, self.ny = int(cx1.max(initial=-1)) + 1, int(cy1.max(initial=-1)) + 1
         row, cy = _expand(cy0, cy1 + 1)
         cell, cx = _expand(cx0[row], cx1[row] + 1)
         key = cy[cell] * self.nx + cx
         order = np.argsort(key, kind="stable")
-        self.keys, cut = np.unique(key[order], return_index=True)
-        self.start = np.append(cut, len(key))
+        key = key[order]
+        cut = np.flatnonzero(np.diff(key, prepend=-1))
+        self.keys, self.start = key[cut], np.append(cut, len(key))
         self.cell_poly = covered[row[cell]][order]
 
     def _cells(self, coord: np.ndarray, origin: float) -> np.ndarray:
@@ -265,24 +306,33 @@ def _contains_udf(index):
     return contains
 
 
-def _vertex_pairs(verts):
-    """A collected ``array<struct<x,y>>`` value as ``(x, y)`` pairs."""
-    if verts is None:
+def _small_side(polygons: DataFrame, verts_col: str) -> Optional[pa.Table]:
+    """The polygon table collected as Arrow when it is small enough to
+    broadcast, else None.  The vertex counts of a limited head decide
+    first, so a large side is never collected."""
+    if BROADCAST_THRESHOLD <= 0:
         return None
-    return [(None, None) if p is None else (p["x"], p["y"]) for p in verts]
+    head = polygons.select(F.size(verts_col)).limit(BROADCAST_THRESHOLD + 1)
+    sizes = head.toArrow().column(0)
+    # size() of a null array is -1, or null under ANSI
+    verts = pc.sum(pc.max_element_wise(sizes, 0)).as_py() or 0
+    if len(sizes) > BROADCAST_THRESHOLD or verts > BROADCAST_VERTICES:
+        return None
+    return polygons.toArrow()
 
 
-def _broadcast_join(points, polygons, rows, verts_col, x, y, cell_spacing, how, pid):
-    """``polygon_join`` against the collected polygon *rows*."""
+def _broadcast_join(points, polygons, table, verts_col, x, y, cell_spacing, how, pid):
+    """``polygon_join`` against the collected polygon *table*."""
     spark = points.sparkSession
-    index = PolygonIndex([_vertex_pairs(r[verts_col]) for r in rows], cell_spacing)
+    index = PolygonIndex(table.column(verts_col), cell_spacing)
     hits = _contains_udf(spark.sparkContext.broadcast(index))(x.cast("double"), y.cast("double"))
     if how == "anti":
         return points.filter(F.size(hits) == 0)
     if how == "semi":
         return points.filter(F.size(hits) > 0).dropDuplicates([pid])
     schema = T.StructType(polygons.schema.fields + [T.StructField("__pi", T.IntegerType(), False)])
-    frame = spark.createDataFrame([(*r, i) for i, r in enumerate(rows)], schema)
+    positions = pa.array(np.arange(table.num_rows, dtype="int32"))
+    frame = spark.createDataFrame(table.append_column("__pi", positions), schema)
     pairs = points.select("*", F.explode(hits).alias("__pi"))
     return pairs.join(F.broadcast(frame), "__pi").drop("__pi")
 
@@ -317,12 +367,13 @@ def polygon_join(
     distinct rows) can misclassify one point — pass a real id column
     where that matters.
 
-    ``method="cells"`` (default) picks by size: a polygon side of at most
-    :data:`BROADCAST_THRESHOLD` rows takes the broadcast kernel, a larger
-    one covers each polygon bbox with square cells of ``cell_spacing``
-    (default: median bbox width / 4) and equi-joins on the point's cell
-    id.  ``method="bbox"`` always takes the broadcast kernel.  Both plans
-    return the same rows.
+    The plan is picked by size: a polygon side of at most
+    :data:`BROADCAST_THRESHOLD` rows and :data:`BROADCAST_VERTICES`
+    vertices takes the broadcast kernel, a larger one covers each polygon
+    bbox with square cells of ``cell_spacing`` (default: median bbox
+    width / 4) and equi-joins on the point's cell id.  Both plans return
+    the same rows.  ``method`` (``"cells"`` or ``"bbox"``) is accepted for
+    compatibility and selects nothing.
     """
     x, y = F.col(easting), F.col(northing)
     if how not in ("inner", "semi", "anti"):
@@ -333,15 +384,9 @@ def polygon_join(
     if how != "inner" and pid is None:
         pid = "__pid"
         points = points.withColumn(pid, F.xxhash64(*points.columns))
-    rows = None
-    if method == "bbox":
-        rows = polygons.collect()
-    elif BROADCAST_THRESHOLD > 0:
-        rows = polygons.limit(BROADCAST_THRESHOLD + 1).collect()
-        if len(rows) > BROADCAST_THRESHOLD:
-            rows = None
-    if rows is not None:
-        out = _broadcast_join(points, polygons, rows, verts_col, x, y, cell_spacing, how, pid)
+    table = _small_side(polygons, verts_col)
+    if table is not None:
+        out = _broadcast_join(points, polygons, table, verts_col, x, y, cell_spacing, how, pid)
         return out.drop("__pid") if pid != point_id else out
 
     cover, s = _cell_cover(_poly_bbox(polygons, verts_col), cell_spacing)
