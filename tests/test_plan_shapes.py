@@ -220,6 +220,31 @@ def test_spline_solve_grid_one_grouped_pass(spark):
     assert "FlatMapCoGroupsInPandas" not in plan
 
 
+def test_cv_fold_prediction_one_grouped_pass(spark):
+    from verde_spark import BlockKFold, Spline
+
+    rng = np.random.RandomState(2)
+    data = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "easting": rng.uniform(0, 10, 200),
+                "northing": rng.uniform(0, 10, 200),
+                "scalars": rng.normal(size=200),
+            }
+        )
+    )
+    cv = BlockKFold(spacing=2.5, n_splits=2, shuffle=True, random_state=0)
+    train, test, region = next(cv._split_regions(data))
+    pred = Spline(tile_spacing=5.0)._fit_predict(
+        train, test, "scalars", None, "easting", "northing", region
+    )
+    # the fold's train points and test rows meet in ONE grouped pass: no
+    # force table between a fit stage and a predict cogroup
+    plan = _plan(pred)
+    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert "FlatMapCoGroupsInPandas" not in plan
+
+
 def test_text_scoring_single_stage_no_python(spark, pages_parquet):
     """lang_id_expr / quality_score / token counts are pure Catalyst
     projections: no exchange, no Python eval — one codegen'd scan stage."""

@@ -489,8 +489,8 @@ def _assert_brute_force(index, polys, x, y):
     return offsets
 
 
-@pytest.mark.parametrize("case", ["one_large", "zero_width"])
-def test_polygon_index_cover_is_bounded(case):
+def _cover_case(case):
+    """``(polygons, x, y)`` whose median bbox width makes a tiny cell."""
     rng = np.random.default_rng(6)
     corners = rng.uniform(0, 40, (1000, 2))
     if case == "one_large":
@@ -503,14 +503,77 @@ def test_polygon_index_cover_is_bounded(case):
         polys = [[(a, b)] for a, b in corners[:800]]
         polys += [[(a, b), (a, b + 5.0)] for a, b in corners[800:990]]
         polys += [[(a, b), (a + 3.0, b), (a, b + 3.0)] for a, b in corners[990:]]
-    index = PolygonIndex(polys)
-    covered = sum(v is not None and len(v) >= 2 for v in polys)
-    assert len(index.cell_poly) <= polygons._COVER * covered
     x, y = rng.uniform(-5, 45, 5000), rng.uniform(-5, 45, 5000)
     # inside the tiny triangles of the first case
     x[:100], y[:100] = corners[:100, 0] + 0.002, corners[:100, 1] + 0.002
+    return polys, x, y
+
+
+@pytest.mark.parametrize("case", ["one_large", "zero_width"])
+def test_polygon_index_cover_is_bounded(case):
+    polys, x, y = _cover_case(case)
+    index = PolygonIndex(polys)
+    covered = sum(v is not None and len(v) >= 2 for v in polys)
+    assert len(index.cell_poly) <= polygons._COVER * covered
     offsets = _assert_brute_force(index, polys, x, y)
     assert offsets[-1] > 50
+
+
+@pytest.mark.parametrize("case", ["one_large", "zero_width"])
+def test_cell_cover_is_bounded(spark, monkeypatch, case):
+    from verde_spark.coordinates import grid_coordinates
+    from verde_spark.operators.polygons import rasterize
+
+    polys, x, y = _cover_case(case)
+    boxes = np.array([[f(np.array(v)[:, c]) for c in (0, 1) for f in (np.min, np.max)]
+                      for v in polys if len(v) >= 2])
+    sides, cell_cover = [], polygons._cell_cover
+
+    def cells(s):
+        n = np.floor(boxes[:, 1::2] / s) - np.floor(boxes[:, 0::2] / s) + 1
+        return (n[:, 0] * n[:, 1]).sum()
+
+    def checked(*args):
+        # the NumPy count of the cover the side makes, before Spark runs
+        # it; half the side would exceed the bound, so no doubling is spare
+        cover, s = cell_cover(*args)
+        assert cells(s) <= polygons._COVER * len(boxes) < cells(s / 2)
+        sides.append(s)
+        return cover, s
+
+    monkeypatch.setattr(polygons, "_cell_cover", checked)
+    monkeypatch.setattr(polygons, "BROADCAST_THRESHOLD", 0)
+    poly_df = spark.createDataFrame(
+        [(i, [{"x": float(a), "y": float(b)} for a, b in v]) for i, v in enumerate(polys)],
+        "poly_id long, vertices array<struct<x:double,y:double>>",
+    )
+    pts = spark.createDataFrame(pd.DataFrame({"pid": np.arange(len(x)), "easting": x, "northing": y}))
+    pairs = polygon_join(pts, poly_df, point_id="pid").select("pid", "poly_id").toPandas()
+    offsets, poly = PolygonIndex(polys).contains(x, y)
+    want = sorted(zip(np.repeat(np.arange(len(x)), np.diff(offsets)).tolist(), poly.tolist()))
+    assert sorted(map(tuple, pairs.to_numpy().tolist())) == want and len(want) > 50
+
+    region, shape = (-5.0, 45.0, -5.0, 45.0), (41, 41)
+    raster = rasterize(poly_df.select("vertices"), region, shape=shape, agg="count",
+                       method="cells", fill=0.0).orderBy("iy", "ix").toPandas()
+    nodes = grid_coordinates(spark, region, shape=shape).orderBy("iy", "ix").toPandas()
+    offsets, _ = PolygonIndex(polys).contains(nodes["easting"], nodes["northing"])
+    np.testing.assert_array_equal(raster["value"], np.diff(offsets))
+    assert len(sides) == 2
+
+
+def test_cell_cover_beyond_the_candidate_doublings(spark):
+    # zero median width: 1e-12 doubled 63 times still cuts the 1e9 square
+    # into ~1e4 cells, so the side grows to the largest bbox side instead
+    polys = polygons._poly_bbox(spark.createDataFrame(
+        [([{"x": 0.0, "y": 0.0}, {"x": 0.0, "y": 1.0}],),
+         ([{"x": 5.0, "y": 0.0}, {"x": 5.0, "y": 1.0}],),
+         ([{"x": 0.0, "y": 0.0}, {"x": 1e9, "y": 0.0}, {"x": 1e9, "y": 1e9}],)],
+        "vertices array<struct<x:double,y:double>>",
+    ), "vertices")
+    cover, s = polygons._cell_cover(polys, "vertices", None)
+    assert 1e9 <= s < 2e9
+    assert cover.count() <= polygons._COVER * 3
 
 
 def test_polygon_index_empty_and_no_candidates():

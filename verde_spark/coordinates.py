@@ -21,7 +21,9 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .geometry import check_region, get_region, shape_to_spacing, spacing_to_size
+from .geometry import (
+    _sql_double, _sql_name, check_region, get_region, shape_to_spacing, spacing_to_size,
+)
 
 Region = Tuple[float, float, float, float]
 
@@ -275,8 +277,10 @@ class BlockGrid:
     Semantics of verde ``block_split`` (coordinates.py:848-944): block label
     = index of the nearest block center, row-major northing-major
     (``iy*n_east + ix``). Because the centers are pixel-registered, the
-    nearest center is a clamped floor division — ``label_expr`` emits only
-    codegen-friendly arithmetic, no KD-tree, no UDF.
+    nearest center is a clamped floor division.  ``label_sql`` is its one
+    definition, as SQL text with DOUBLE literals: ``label_expr`` parses it
+    into one codegen-friendly Spark expression (no KD-tree, no UDF), and
+    the DuckDB oracles run the same text.
 
     Boundary semantics: a point exactly on an interior block edge is
     equidistant from two centers; we assign it to the higher-index block
@@ -312,24 +316,30 @@ class BlockGrid:
     def n_blocks(self) -> int:
         return self.east.size * self.north.size
 
-    def _index_expr(self, coord: Column, axis: Axis) -> Column:
-        # centers at axis.start + i*axis.step; nearest index = clamped
-        # floor((x - edge)/step) with edge = start - step/2 = region West/South.
+    def _index_sql(self, coord: str, axis: Axis) -> str:
+        """SQL text of the clamped block index of *coord* (SQL text) along
+        *axis*: centers at ``axis.start + i*axis.step``, so the nearest
+        index is ``floor((x - edge)/step)`` with edge = start - step/2 =
+        the region's West/South."""
         edge = axis.start - axis.step / 2
-        raw = F.floor((coord - F.lit(edge)) / F.lit(axis.step)).cast("long")
-        return F.least(F.lit(axis.size - 1), F.greatest(F.lit(0), raw))
+        return (
+            f"LEAST({axis.size - 1}, GREATEST(0, CAST(FLOOR((({coord}) - "
+            f"{_sql_double(edge)}) / {_sql_double(axis.step)}) AS BIGINT)))"
+        )
 
-    def label_expr(
-        self,
-        easting: Column | str = "easting",
-        northing: Column | str = "northing",
-    ) -> Column:
-        """Integer block label column (the shuffle key)."""
-        e = F.col(easting) if isinstance(easting, str) else easting
-        n = F.col(northing) if isinstance(northing, str) else northing
-        ix = self._index_expr(e, self.east)
-        iy = self._index_expr(n, self.north)
-        return (iy * F.lit(self.n_east) + ix).alias("block")
+    def label_sql(self, easting: str = "easting", northing: str = "northing") -> str:
+        """SQL text of the integer block label, over the SQL names or
+        expressions *easting* and *northing*.  Spark parses it in
+        ``label_expr`` and the DuckDB oracles run it as is; the literals
+        are DOUBLEs in both."""
+        ix = self._index_sql(easting, self.east)
+        iy = self._index_sql(northing, self.north)
+        return f"({iy} * {self.n_east} + {ix})"
+
+    def label_expr(self, easting: str = "easting", northing: str = "northing") -> Column:
+        """Integer block label column (the shuffle key) of the columns
+        named *easting* and *northing*: ``label_sql`` in one parse."""
+        return F.expr(self.label_sql(_sql_name(easting), _sql_name(northing))).alias("block")
 
     def center_exprs(self, label: Column | str = "block") -> Tuple[Column, Column]:
         """(center_easting, center_northing) reconstructed from a label."""
@@ -337,20 +347,6 @@ class BlockGrid:
         ix = lab % F.lit(self.n_east)
         iy = (lab / F.lit(self.n_east)).cast("long")
         return self.east.expr(ix), self.north.expr(iy)
-
-    def label_sql(self, easting: str = "easting", northing: str = "northing") -> str:
-        """ANSI-SQL text of ``label_expr`` (for DuckDB oracle parity)."""
-        ew = self.east.start - self.east.step / 2
-        nw = self.north.start - self.north.step / 2
-        ix = (
-            f"LEAST({self.n_east - 1}, GREATEST(0, "
-            f"CAST(FLOOR(({easting} - ({ew!r})) / ({self.east.step!r})) AS BIGINT)))"
-        )
-        iy = (
-            f"LEAST({self.n_north - 1}, GREATEST(0, "
-            f"CAST(FLOOR(({northing} - ({nw!r})) / ({self.north.step!r})) AS BIGINT)))"
-        )
-        return f"({iy} * {self.n_east} + {ix})"
 
     def centers(self) -> Tuple[np.ndarray, np.ndarray]:
         """All center coordinates, raveled row-major (verde block_split return)."""

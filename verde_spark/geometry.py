@@ -29,18 +29,28 @@ def check_region(region: Sequence[float]) -> Region:
     return (w, e, s, n)
 
 
+def _sql_name(name: str) -> str:
+    """*name* as Spark SQL text that resolves like ``F.col(name)``: each
+    dot-separated part back-quoted."""
+    return ".".join("`" + part.replace("`", "``") + "`" for part in name.split("."))
+
+
+def _sql_double(value: float) -> str:
+    """A DOUBLE literal of *value* that Spark and DuckDB both read exactly:
+    the shortest round-trip digits in exponent form (both read ``0.07``
+    as a DECIMAL)."""
+    text = repr(float(value))
+    return f"({text if 'e' in text else text + 'E0'})"
+
+
 def get_region(df: DataFrame, easting: str = "easting", northing: str = "northing") -> Region:
     """Bounding region of the points in *df* (verde coordinates.py:53-81).
 
     One distributed min/max aggregation; the result is a tiny driver value.
     """
-    row = df.agg(
-        F.min(easting).alias("w"),
-        F.max(easting).alias("e"),
-        F.min(northing).alias("s"),
-        F.max(northing).alias("n"),
-    ).first()
-    return (row["w"], row["e"], row["s"], row["n"])
+    e, n = _sql_name(easting), _sql_name(northing)
+    row = df.selectExpr(f"min({e})", f"max({e})", f"min({n})", f"max({n})").first()
+    return tuple(row)
 
 
 def pad_region(region: Sequence[float], pad) -> Region:

@@ -1,11 +1,18 @@
 """Blocked model selection — splits, folds, scoring (verde model_selection.py).
 
-Split *decisions* operate on the tiny table of distinct block ids and
-per-block point counts (thousands of rows however big the input), so they
-run driver-side with seeded NumPy exactly like the reference runs sklearn;
-fold *membership* goes back into the cluster as an ``isin`` predicate on
-the block-label column — a broadcast filter, no shuffle. Scoring (R²) is
-two aggregates.
+Split *decisions* operate on the tiny table of distinct block ids,
+per-block point counts and per-block coordinate bounds (thousands of rows
+however big the input, from one groupBy), so they run driver-side with
+seeded NumPy exactly like the reference runs sklearn. Fold *membership*
+goes back into the cluster as one parsed ``label IN (…)`` filter per side
+(the ``BlockGrid.label_sql`` text; a hash-set lookup, no shuffle), and
+each fold's train region is read off the block bounds, so no fit scans
+for it.
+
+Per fold, ``cross_val_score`` then runs one plan: for a ``Spline``, ONE
+grouped pass that solves each tile's train points and evaluates its test
+rows (``Spline._fit_predict``); for other estimators, ``fit`` then
+``predict``. Scoring is one aggregate action per fold.
 
 RNG note: the reference delegates to sklearn's ShuffleSplit/KFold; we
 reimplement their exact permutation algorithms over
@@ -26,7 +33,7 @@ from pyspark.sql import functions as F
 
 from .coordinates import BlockGrid
 from .base import BaseBlockCrossValidator
-from .geometry import get_region
+from .geometry import _sql_name, get_region
 
 
 # ---------------------------------------------------------------------------
@@ -232,16 +239,62 @@ def partition_by_sum(array, parts: int) -> np.ndarray:
 
 def _block_counts(
     df: DataFrame, grid: BlockGrid, easting: str, northing: str
-) -> Tuple[np.ndarray, np.ndarray]:
-    """(sorted distinct block ids, per-block point counts) — one groupBy,
-    tiny driver-side result (≤ n_blocks rows)."""
-    pdf = (
+) -> pd.DataFrame:
+    """Per block, sorted by ``block``: the point count ``cnt`` and the
+    bounds ``w, e, s, n`` of its points — one groupBy, tiny driver-side
+    result (≤ n_blocks rows)."""
+    e, n = _sql_name(easting), _sql_name(northing)
+    aggs = ["count(1) AS cnt", f"min({e}) AS w", f"max({e}) AS e", f"min({n}) AS s", f"max({n}) AS n"]
+    return (
         df.groupBy(grid.label_expr(easting, northing))
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        .agg(*[F.expr(a) for a in aggs])
         .orderBy("block")
         .toPandas()
     )
-    return pdf["block"].to_numpy(), pdf["cnt"].to_numpy()
+
+
+class _BlockSplitter(BaseBlockCrossValidator):
+    """The splitting shared by the blocked CVs: subclasses decide the test
+    block ids of each fold from the ``_block_counts`` table."""
+
+    def _test_blocks(self, stats: pd.DataFrame) -> Iterator[np.ndarray]:
+        raise NotImplementedError
+
+    def _stats(
+        self, df: DataFrame, easting: str, northing: str, grid: Optional[BlockGrid] = None
+    ) -> Tuple[BlockGrid, pd.DataFrame]:
+        # a grid the caller already derived skips get_region's table scan
+        if grid is None:
+            region = get_region(df, easting, northing)
+            grid = BlockGrid.from_region(region, spacing=self.spacing, shape=self.shape)
+        return grid, _block_counts(df, grid, easting, northing)
+
+    def _split_regions(
+        self, df: DataFrame, easting: str = "easting", northing: str = "northing"
+    ) -> Iterator[Tuple[DataFrame, DataFrame, Tuple[float, float, float, float]]]:
+        """``split``'s ``(train, test)`` folds, each with its train region.
+
+        Membership is one parsed ``label IN (…)`` predicate per side.  The
+        train region is the min/max of the per-block bounds over the blocks
+        outside the test set: exactly ``get_region(train)``, with no job.
+        """
+        grid, stats = self._stats(df, easting, northing)
+        label = grid.label_sql(_sql_name(easting), _sql_name(northing))
+        for test_blocks in self._test_blocks(stats):
+            ids = ", ".join(str(int(b)) for b in test_blocks)
+            rest = stats[~stats["block"].isin(test_blocks)]
+            region = (rest["w"].min(), rest["e"].max(), rest["s"].min(), rest["n"].max())
+            yield (
+                df.filter(f"{label} NOT IN ({ids})"),
+                df.filter(f"{label} IN ({ids})"),
+                tuple(float(v) for v in region),
+            )
+
+    def split(
+        self, df: DataFrame, easting: str = "easting", northing: str = "northing"
+    ) -> Iterator[Tuple[DataFrame, DataFrame]]:
+        for train, test, _ in self._split_regions(df, easting, northing):
+            yield train, test
 
 
 class KFoldRows:
@@ -399,7 +452,7 @@ class KFoldRows:
             )
 
 
-class BlockShuffleSplit(BaseBlockCrossValidator):
+class BlockShuffleSplit(_BlockSplitter):
     """verde BlockShuffleSplit (model_selection.py:23-215): shuffle blocks
     into train/test; generate ``balancing`` candidate shuffles per split and
     keep the one whose point ratio best matches the block ratio."""
@@ -432,14 +485,12 @@ class BlockShuffleSplit(BaseBlockCrossValidator):
         grid: Optional[BlockGrid] = None,
     ) -> Iterator[Tuple[np.ndarray, np.ndarray]]:
         """Yield (train_block_ids, test_block_ids) per split.  Pass the
-        *grid* when the caller already derived it (``split`` does) —
-        ``get_region`` is a full min/max table scan."""
-        if grid is None:
-            region = get_region(df, easting, northing)
-            grid = BlockGrid.from_region(
-                region, spacing=self.spacing, shape=self.shape
-            )
-        block_ids, counts = _block_counts(df, grid, easting, northing)
+        *grid* when the caller already derived it — ``get_region`` is a
+        full min/max table scan."""
+        return self._block_splits(self._stats(df, easting, northing, grid)[1])
+
+    def _block_splits(self, stats: pd.DataFrame) -> Iterator[Tuple[np.ndarray, np.ndarray]]:
+        block_ids, counts = stats["block"].to_numpy(), stats["cnt"].to_numpy()
         count_of = dict(zip(block_ids.tolist(), counts.tolist()))
         shuffle = shuffle_split_indices(
             len(block_ids),
@@ -460,25 +511,11 @@ class BlockShuffleSplit(BaseBlockCrossValidator):
                 candidates.append((train_blocks, test_blocks))
             yield candidates[int(np.argmin(balance))]
 
-    def split(
-        self, df: DataFrame, easting: str = "easting", northing: str = "northing"
-    ) -> Iterator[Tuple[DataFrame, DataFrame]]:
-        region = get_region(df, easting, northing)
-        grid = BlockGrid.from_region(region, spacing=self.spacing, shape=self.shape)
-        labeled = df.withColumn("__block", grid.label_expr(easting, northing))
-        # forward the grid: split_blocks would otherwise re-run the
-        # get_region min/max scan the line above just paid for
-        for train_blocks, test_blocks in self.split_blocks(
-            df, easting, northing, grid=grid
-        ):
-            test_set = [int(b) for b in test_blocks]
-            yield (
-                labeled.filter(~F.col("__block").isin(test_set)).drop("__block"),
-                labeled.filter(F.col("__block").isin(test_set)).drop("__block"),
-            )
+    def _test_blocks(self, stats: pd.DataFrame) -> Iterator[np.ndarray]:
+        return (test for _, test in self._block_splits(stats))
 
 
-class BlockKFold(BaseBlockCrossValidator):
+class BlockKFold(_BlockSplitter):
     """verde BlockKFold (model_selection.py:218-423): K folds over blocks,
     optionally shuffled and balanced by per-block point counts via
     :func:`partition_by_sum`."""
@@ -509,13 +546,11 @@ class BlockKFold(BaseBlockCrossValidator):
         grid: Optional[BlockGrid] = None,
     ) -> List[np.ndarray]:
         """List of test-block-id arrays, one per fold.  Pass the *grid*
-        when the caller already derived it (``split`` does)."""
-        if grid is None:
-            region = get_region(df, easting, northing)
-            grid = BlockGrid.from_region(
-                region, spacing=self.spacing, shape=self.shape
-            )
-        block_ids, counts = _block_counts(df, grid, easting, northing)
+        when the caller already derived it."""
+        return self._test_blocks(self._stats(df, easting, northing, grid)[1])
+
+    def _test_blocks(self, stats: pd.DataFrame) -> List[np.ndarray]:
+        block_ids, counts = stats["block"].to_numpy(), stats["cnt"].to_numpy()
         if self.n_splits > block_ids.size:
             raise ValueError(
                 f"Number of k-fold splits ({self.n_splits}) cannot be greater than "
@@ -546,20 +581,6 @@ class BlockKFold(BaseBlockCrossValidator):
         else:
             folds = [test for _, test in kfold_indices(block_ids.size, self.n_splits)]
         return [block_ids[f] for f in folds]
-
-    def split(
-        self, df: DataFrame, easting: str = "easting", northing: str = "northing"
-    ) -> Iterator[Tuple[DataFrame, DataFrame]]:
-        region = get_region(df, easting, northing)
-        grid = BlockGrid.from_region(region, spacing=self.spacing, shape=self.shape)
-        labeled = df.withColumn("__block", grid.label_expr(easting, northing))
-        # forward the grid (see BlockShuffleSplit.split)
-        for test_blocks in self.fold_blocks(df, easting, northing, grid=grid):
-            test_set = [int(b) for b in test_blocks]
-            yield (
-                labeled.filter(~F.col("__block").isin(test_set)).drop("__block"),
-                labeled.filter(F.col("__block").isin(test_set)).drop("__block"),
-            )
 
 
 def train_test_split(
@@ -609,6 +630,14 @@ def train_test_split(
     return next(splitter.split(df, easting, northing))
 
 
+def _folds(cv, df: DataFrame, easting: str, northing: str):
+    """*cv*'s ``(train, test)`` folds, each with its train region when the
+    splitter knows it (the blocked CVs), else None."""
+    if isinstance(cv, _BlockSplitter):
+        return cv._split_regions(df, easting, northing)
+    return ((train, test, None) for train, test in cv.split(df, easting, northing))
+
+
 def cross_val_score(
     make_estimator,
     df: DataFrame,
@@ -638,9 +667,13 @@ def cross_val_score(
         proto = make_estimator
         make_estimator = lambda: clone(proto)  # noqa: E731
     scores = []
-    for train, test in cv.split(df, easting, northing):
+    for train, test, region in _folds(cv, df, easting, northing):
         est = make_estimator()
-        est.fit(train, data_col=data_col, weight_col=weight_col, easting=easting, northing=northing)
-        pred = est.predict(test, "__pred", easting=easting, northing=northing)
+        fit_predict = getattr(est, "_fit_predict", None)
+        if fit_predict is not None:  # a Spline: one grouped pass per fold
+            pred = fit_predict(train, test, data_col, weight_col, easting, northing, region)
+        else:
+            est.fit(train, data_col=data_col, weight_col=weight_col, easting=easting, northing=northing)
+            pred = est.predict(test, "__pred", easting=easting, northing=northing)
         scores.append(score_with(scoring, pred, data_col, "__pred", weight_col))
     return scores

@@ -53,6 +53,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..geometry import _sql_double, _sql_name
 from .neighbors import _chunks, _expand
 
 #: Most rows and vertices of a polygon side that ``polygon_join`` collects
@@ -71,6 +72,9 @@ _VERTICES = pa.list_(pa.struct([("x", pa.float64()), ("y", pa.float64())]))
 # cells the broadcast index covers the polygon bboxes with, at most, per
 # covered polygon; a quarter-width cell covers a median bbox with 25-36
 _COVER = 64
+# candidate cell sides (cell_spacing doubled 0..63 times) one aggregate
+# of _cell_cover counts the cover at
+_DOUBLINGS = 64
 
 
 def polygon_literal(vertices: Sequence[Tuple[float, float]]) -> Column:
@@ -148,22 +152,58 @@ def _default_spacing(widths) -> float:
     return max(float(np.median(w)) / 4.0, 1e-12) if len(w) else 1.0
 
 
-def _cell_cover(polys: DataFrame, cell_spacing: Optional[float]) -> Tuple[DataFrame, float]:
+def _cell_cover(
+    polys: DataFrame, verts_col: str, cell_spacing: Optional[float]
+) -> Tuple[DataFrame, float]:
     """Explode each ``_poly_bbox`` row into the square cells ``(__cx,
-    __cy)`` its bbox touches, and return the cover with the cell side
-    (``cell_spacing``, or the median bbox width / 4)."""
-    if cell_spacing is None:
-        width = polys.select(F.expr("percentile(__xmax - __xmin, 0.5)")).first()[0]
-        cell_spacing = _default_spacing([width])
-    s = float(cell_spacing)
+    __cy)`` its bbox touches, and return the cover with the cell side.
 
-    def cells(lo, hi):
+    The side is bounded as ``PolygonIndex`` bounds its own: ``cell_spacing``
+    (default: the median bbox width / 4 over the polygons with an edge and
+    a finite bbox), doubled until those polygons cover at most ``_COVER``
+    cells each.  One aggregate action decides it: the cover count at each
+    of ``_DOUBLINGS`` candidate sides, and the largest bbox side for the
+    rare table that needs more doublings.
+    """
+    covered = polys.where(
+        f"size({_sql_name(verts_col)}) >= 2 AND "
+        "abs(__xmin) + abs(__xmax) + abs(__ymin) + abs(__ymax) < double('inf')"
+    )
+    if cell_spacing is None:
+        side = covered.selectExpr(
+            "coalesce(greatest(percentile(__xmax - __xmin, 0.5) / 4, 1e-12), 1.0) AS __s0"
+        )
+        covered = covered.crossJoin(F.broadcast(side))
+    else:
+        covered = covered.selectExpr("*", f"{_sql_double(cell_spacing)} AS __s0")
+
+    def cells(lo, hi, k):
+        s = f"(__s0 * power(2, {k}))"
+        return f"(CAST(floor({hi} / {s}) AS DOUBLE) - CAST(floor({lo} / {s}) AS DOUBLE) + 1)"
+
+    counts = [
+        f"sum({cells('__xmin', '__xmax', k)} * {cells('__ymin', '__ymax', k)}) AS c{k}"
+        for k in range(_DOUBLINGS)
+    ]
+    row = covered.selectExpr(
+        "count(1) AS n", "first(__s0) AS s0",
+        "max(greatest(__xmax - __xmin, __ymax - __ymin)) AS extent", *counts,
+    ).first()
+    if row["n"] == 0:
+        s = 1.0 if cell_spacing is None else float(cell_spacing)
+    else:
+        fits = [k for k in range(_DOUBLINGS) if row[f"c{k}"] <= _COVER * row["n"]]
+        s = row["s0"] * 2.0 ** (fits[0] if fits else _DOUBLINGS)
+        while not fits and s < row["extent"]:  # then each bbox touches ≤ 2 x 2 cells
+            s *= 2
+
+    def explode(lo, hi):
         return F.explode(F.sequence(
             F.floor(F.col(lo) / s).cast("long"), F.floor(F.col(hi) / s).cast("long")
         ))
 
-    return polys.withColumn("__cx", cells("__xmin", "__xmax")).withColumn(
-        "__cy", cells("__ymin", "__ymax")
+    return polys.withColumn("__cx", explode("__xmin", "__xmax")).withColumn(
+        "__cy", explode("__ymin", "__ymax")
     ), s
 
 
@@ -389,7 +429,7 @@ def polygon_join(
         out = _broadcast_join(points, polygons, table, verts_col, x, y, cell_spacing, how, pid)
         return out.drop("__pid") if pid != point_id else out
 
-    cover, s = _cell_cover(_poly_bbox(polygons, verts_col), cell_spacing)
+    cover, s = _cell_cover(_poly_bbox(polygons, verts_col), verts_col, cell_spacing)
     pts = points.withColumn("__cx", F.floor(x / s).cast("long")).withColumn(
         "__cy", F.floor(y / s).cast("long")
     )
@@ -562,7 +602,7 @@ def rasterize(
         raise ValueError(f"unknown method: {method!r}")
 
     polys = _poly_bbox(polygons.select(F.col(verts_col), vcol.alias("__val")), verts_col)
-    cover, s = _cell_cover(polys, cell_spacing)
+    cover, s = _cell_cover(polys, verts_col, cell_spacing)
     pts = nodes.withColumn("__cx", F.floor(x / s).cast("long")).withColumn(
         "__cy", F.floor(y / s).cast("long")
     )

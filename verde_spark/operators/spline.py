@@ -19,6 +19,13 @@ cell) a 10^12-row table becomes ~n_cells forces spread over tiles that
 each fit comfortably in executor memory. Single-tile mode
 (``tile_spacing=None``) reproduces the reference exactly and is the
 parity-test regime.
+
+Cross-validation takes the same shape: ``cross_val_score`` hands each
+fold to ``Spline._fit_predict``, ONE grouped pass over the fold's
+halo-exploded train points and its test rows, whose kernel solves and
+evaluates in one call (``_solve_at``, shared with the fused grid).  The
+tile and halo index expressions are SQL text (``BlockGrid.label_sql``,
+``_halo_sql``), each parsed once per DataFrame.
 """
 
 from __future__ import annotations
@@ -33,7 +40,7 @@ from pyspark.sql import types as T
 
 from ..coordinates import BlockGrid, _resolve_axes
 from ..base import BaseGridder
-from ..geometry import get_region
+from ..geometry import _sql_double, _sql_name, get_region
 from ..lstsq import least_squares
 
 
@@ -100,25 +107,30 @@ def _tile_grid(
     return BlockGrid.from_region(region, spacing=tile_spacing), pad
 
 
-def _halo_explode(
-    df: DataFrame, grid: BlockGrid, pad: float, easting: str, northing: str
-) -> DataFrame:
-    """Duplicate each point into every tile whose *padded* extent contains it.
+def _halo_sql(grid: BlockGrid, pad: float, easting: str, northing: str) -> str:
+    """SQL text of the ``tile`` generator over the SQL names *easting* and
+    *northing*: one row per tile whose *padded* extent holds the point.
 
     The halo-exchange primitive (SURVEY §4.2 / verde rolling_window
     semantics, coordinates.py:947-1202): candidate tile indices are the
-    block indices of (coord ± pad) — a ≤(2×2) integer range, exploded via
-    ``sequence`` (pure Catalyst, no UDF).
+    block indices of (coord ± pad), a ≤(2×2) integer range, exploded in
+    one generator (pure Catalyst, no UDF).
     """
-    e, n, p = F.col(easting), F.col(northing), F.lit(pad)
-    ix = F.sequence(grid._index_expr(e - p, grid.east), grid._index_expr(e + p, grid.east))
-    iy = F.sequence(grid._index_expr(n - p, grid.north), grid._index_expr(n + p, grid.north))
+    p = _sql_double(pad)
+    ix = [grid._index_sql(f"{easting} {op} {p}", grid.east) for op in "-+"]
+    iy = [grid._index_sql(f"{northing} {op} {p}", grid.north) for op in "-+"]
     return (
-        df.withColumn("__ix", F.explode(ix))
-        .withColumn("__iy", F.explode(iy))
-        .withColumn("tile", F.col("__iy") * F.lit(grid.n_east) + F.col("__ix"))
-        .drop("__ix", "__iy")
+        f"explode(flatten(transform(sequence({iy[0]}, {iy[1]}), __iy -> "
+        f"transform(sequence({ix[0]}, {ix[1]}), __ix -> __iy * {grid.n_east} + __ix)))) AS tile"
     )
+
+
+def _halo_explode(
+    df: DataFrame, grid: BlockGrid, pad: float, easting: str, northing: str
+) -> DataFrame:
+    """Duplicate each point into every tile whose padded extent contains
+    it (``_halo_sql``): *df*'s columns plus ``tile``."""
+    return df.selectExpr("*", _halo_sql(grid, pad, _sql_name(easting), _sql_name(northing)))
 
 
 def _tile_points(
@@ -127,13 +139,12 @@ def _tile_points(
 ) -> DataFrame:
     """Halo-exploded ``(easting, northing, data, weight, tile)`` solve input;
     ``weight`` is null when no *weight_col* is given."""
-    pts = df.select(
-        F.col(easting).alias("easting"),
-        F.col(northing).alias("northing"),
-        F.col(data_col).alias("data"),
-        (F.col(weight_col) if weight_col else F.lit(None).cast("double")).alias("weight"),
+    e, n = _sql_name(easting), _sql_name(northing)
+    weight = _sql_name(weight_col) if weight_col else "CAST(NULL AS DOUBLE)"
+    return df.selectExpr(
+        f"{e} AS easting", f"{n} AS northing", f"{_sql_name(data_col)} AS data",
+        f"{weight} AS weight", _halo_sql(grid, pad, e, n),
     )
-    return _halo_explode(pts, grid, pad, "easting", "northing")
 
 
 def _tile_forces(
@@ -151,6 +162,21 @@ def _tile_forces(
     north = points["northing"].to_numpy("float64")
     jac = spline_jacobian(east, north, force_east, force_north, mindist)
     return least_squares(jac, points["data"].to_numpy("float64"), weights, damping)
+
+
+def _solve_at(
+    points: pd.DataFrame, east: np.ndarray, north: np.ndarray,
+    damping: Optional[float], mindist: float,
+) -> np.ndarray:
+    """Solve one tile's *points* (``_tile_points`` columns) with forces at
+    the points and evaluate the spline at ``(east, north)``; NaN when the
+    tile has no points."""
+    if len(points) == 0 or len(east) == 0:
+        return np.full(len(east), np.nan)
+    p_east = points["easting"].to_numpy("float64")
+    p_north = points["northing"].to_numpy("float64")
+    forces = _tile_forces(points, p_east, p_north, damping, mindist)
+    return spline_predict(east, north, p_east, p_north, forces, mindist)
 
 
 class Spline(BaseGridder):
@@ -310,6 +336,61 @@ class Spline(BaseGridder):
             .applyInPandas(evaluate, schema)
         )
 
+    def _fit_predict(
+        self,
+        train: DataFrame,
+        test: DataFrame,
+        data_col: str,
+        weight_col: Optional[str],
+        easting: str,
+        northing: str,
+        region=None,
+        output_col: str = "__pred",
+    ) -> DataFrame:
+        """``fit(train)`` then ``predict(test)`` of one cross-validation
+        fold, in ONE ``groupBy(tile).applyInPandas``.
+
+        Each tile's group holds its halo-exploded train rows
+        (``_tile_points``) and its test rows, flagged by a non-null
+        ``query``; the kernel solves the former and evaluates at the latter
+        (``_solve_at``), so test rows in a tile without train rows get NaN,
+        as ``predict`` gives them.  *region* is the train region when the
+        splitter knows it, else one ``get_region``.  Returns the test rows'
+        *easting*, *northing*, *data_col*, *weight_col* and *output_col*.
+        A ``force_coords`` spline fits and predicts; any other is left
+        unfitted.
+        """
+        if self.force_coords is not None:
+            self.fit(train, data_col, weight_col, easting, northing, region)
+            return self.predict(test, output_col, easting, northing)
+        if region is None:
+            region = get_region(train, easting, northing)
+        grid, pad = _tile_grid(region, self.tile_spacing, self.halo)
+        e, n = _sql_name(easting), _sql_name(northing)
+        weight = _sql_name(weight_col) if weight_col else "CAST(NULL AS DOUBLE)"
+        queries = test.selectExpr(
+            f"{e} AS easting", f"{n} AS northing", f"CAST({_sql_name(data_col)} AS DOUBLE) AS data",
+            f"CAST({weight} AS DOUBLE) AS weight", f"{grid.label_sql(e, n)} AS tile", "true AS query",
+        )
+        points = _tile_points(train, grid, pad, data_col, weight_col, easting, northing)
+        inputs = points.unionByName(queries, allowMissingColumns=True)
+        cols = {easting: "easting", northing: "northing", data_col: "data"}
+        if weight_col:
+            cols[weight_col] = "weight"
+        schema = T.StructType([T.StructField(c, T.DoubleType()) for c in [*cols, output_col]])
+        damping, mindist = self.damping, self.mindist
+
+        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+            query = pdf["query"].notna().to_numpy()
+            rows = pdf[query]
+            east = rows["easting"].to_numpy("float64")
+            north = rows["northing"].to_numpy("float64")
+            out = {c: rows[src].to_numpy("float64") for c, src in cols.items()}
+            out[output_col] = _solve_at(pdf[~query], east, north, damping, mindist)
+            return pd.DataFrame(out)
+
+        return inputs.groupBy("tile").applyInPandas(fold, schema)
+
     def filter(
         self,
         df: DataFrame,
@@ -340,15 +421,15 @@ def _fused_plan(
     predictions on point-free tiles.
     """
     grid, pad = _tile_grid(region, tile_spacing, halo)
-    nulls = [F.lit(None).cast("double").alias(c) for c in ("easting", "northing", "data", "weight")]
-    sentinels = df.sparkSession.range(grid.n_blocks).select(F.col("id").alias("tile"), *nulls)
+    nulls = [f"CAST(NULL AS DOUBLE) AS {c}" for c in ("easting", "northing", "data", "weight")]
+    sentinels = df.sparkSession.range(grid.n_blocks).selectExpr("id AS tile", *nulls)
     points = _tile_points(df, grid, pad, data_col, weight_col, easting, northing)
     inputs = points.unionByName(sentinels)
 
     node_east, node_north = (axis.values() for axis in _resolve_axes(region, shape))
 
     def tile_index(values: np.ndarray, axis) -> np.ndarray:
-        # NumPy twin of BlockGrid._index_expr
+        # NumPy twin of BlockGrid._index_sql
         raw = np.floor((values - (axis.start - axis.step / 2)) / axis.step)
         return np.clip(raw, 0, axis.size - 1).astype("int64")
 
@@ -364,14 +445,7 @@ def _fused_plan(
         rows, cols = np.flatnonzero(tile_iy == ty), np.flatnonzero(tile_ix == tx)
         iy, ix = np.repeat(rows, cols.size), np.tile(cols, rows.size)  # row-major
         east, north = node_east[ix], node_north[iy]
-        points = pdf[pdf["easting"].notna()]
-        if len(points) == 0 or len(iy) == 0:
-            pred = np.full(len(iy), np.nan)
-        else:
-            p_east = points["easting"].to_numpy("float64")
-            p_north = points["northing"].to_numpy("float64")
-            forces = _tile_forces(points, p_east, p_north, damping, mindist)
-            pred = spline_predict(east, north, p_east, p_north, forces, mindist)
+        pred = _solve_at(pdf[pdf["easting"].notna()], east, north, damping, mindist)
         return pd.DataFrame(
             {"tile": tile, "iy": iy, "ix": ix, northing: north, easting: east, output_col: pred}
         )
