@@ -350,8 +350,8 @@ class Spline(BaseGridder):
         """``fit(train)`` then ``predict(test)`` of one cross-validation
         fold, in ONE ``groupBy(tile).applyInPandas``.
 
-        Each tile's group holds its halo-exploded train rows
-        (``_tile_points``) and its test rows, flagged by a non-null
+        Each tile's group holds its halo-exploded train rows and its test
+        rows (both ``_tile_points``), the latter flagged by a non-null
         ``query``; the kernel solves the former and evaluates at the latter
         (``_solve_at``), so test rows in a tile without train rows get NaN,
         as ``predict`` gives them.  *region* is the train region when the
@@ -366,27 +366,20 @@ class Spline(BaseGridder):
         if region is None:
             region = get_region(train, easting, northing)
         grid, pad = _tile_grid(region, self.tile_spacing, self.halo)
-        e, n = _sql_name(easting), _sql_name(northing)
-        weight = _sql_name(weight_col) if weight_col else "CAST(NULL AS DOUBLE)"
-        queries = test.selectExpr(
-            f"{e} AS easting", f"{n} AS northing", f"CAST({_sql_name(data_col)} AS DOUBLE) AS data",
-            f"CAST({weight} AS DOUBLE) AS weight", f"{grid.label_sql(e, n)} AS tile", "true AS query",
-        )
-        points = _tile_points(train, grid, pad, data_col, weight_col, easting, northing)
-        inputs = points.unionByName(queries, allowMissingColumns=True)
-        cols = {easting: "easting", northing: "northing", data_col: "data"}
+        args = (data_col, weight_col, easting, northing)
+        # no pad: each test row in the one tile predict would label it
+        queries = _tile_points(test, grid, 0.0, *args).selectExpr("*", "true AS query")
+        inputs = _tile_points(train, grid, pad, *args).unionByName(queries, allowMissingColumns=True)
+        names = {easting: "easting", northing: "northing", data_col: "data"}
         if weight_col:
-            cols[weight_col] = "weight"
-        schema = T.StructType([T.StructField(c, T.DoubleType()) for c in [*cols, output_col]])
+            names[weight_col] = "weight"
+        schema = T.StructType([T.StructField(c, T.DoubleType()) for c in [*names, output_col]])
         damping, mindist = self.damping, self.mindist
 
         def fold(pdf: pd.DataFrame) -> pd.DataFrame:
             query = pdf["query"].notna().to_numpy()
-            rows = pdf[query]
-            east = rows["easting"].to_numpy("float64")
-            north = rows["northing"].to_numpy("float64")
-            out = {c: rows[src].to_numpy("float64") for c, src in cols.items()}
-            out[output_col] = _solve_at(pdf[~query], east, north, damping, mindist)
+            out = {c: pdf.loc[query, src].to_numpy("float64") for c, src in names.items()}
+            out[output_col] = _solve_at(pdf[~query], out[easting], out[northing], damping, mindist)
             return pd.DataFrame(out)
 
         return inputs.groupBy("tile").applyInPandas(fold, schema)
