@@ -214,6 +214,8 @@ def reference_head_to_head(spark):
         vd = load_reference()
     except Exception as exc:  # noqa: BLE001 - report, never fail the bench
         return {"err": f"reference unavailable: {exc}"}
+    if vd is None:
+        return {"err": "reference unavailable: no verde checkout or package"}
 
     from pyspark.sql import functions as F
 

@@ -1,13 +1,25 @@
 """Direct parity against the REFERENCE implementation.
 
-``verde_ref.load_reference()`` imports the actual reference package from
-/root/reference (with minimal dependency stand-ins — see verde_ref.py),
-runs its own NumPy/pandas code on shared fixtures, and these tests assert
-our Spark operators produce the same outputs.  This is the strongest form
-of SURVEY §5's "Spark output vs verde oracle on the same fixture".
+``verde_ref.load_reference()`` imports the actual reference package — the
+read-only checkout in ``reference/`` beside this repository, or an
+installed ``verde`` (with minimal stand-ins for its missing dependencies,
+see verde_ref.py) — runs its own NumPy/pandas code on shared fixtures, and
+these tests assert our Spark operators produce the same outputs.  This is
+the strongest form of SURVEY §5's "Spark output vs verde oracle on the
+same fixture".
+
+The 32 oracle comparisons run only where verde can be imported; elsewhere
+``load_reference()`` returns ``None`` and they are skipped by
+``needs_reference``, whose reason names what is missing.
+``test_ref_public_api_surface`` needs no oracle and always runs, as do the
+checks of the loader itself.
 """
 
+import json
 import math
+import os
+import subprocess
+import sys
 
 import numpy as np
 import numpy.testing as npt
@@ -15,12 +27,18 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from verde_ref import load_reference
+from verde_ref import REFERENCE_ROOT, load_reference
 
 import verde_spark as vs
 from verde_spark.coordinates import block_split, grid_coordinates
 
 vd = load_reference()
+
+needs_reference = pytest.mark.skipif(
+    vd is None,
+    reason=f"verde oracle missing: no {os.path.join(REFERENCE_ROOT, 'verde')} "
+    "checkout and no installed verde package",
+)
 
 
 def _scatter_df(spark, e, n, d, w=None):
@@ -40,6 +58,7 @@ def fixture():
     return e, n, d, w
 
 
+@needs_reference
 def test_ref_spacing_to_size_and_grid_coordinates(spark):
     from verde.coordinates import spacing_to_size
 
@@ -61,6 +80,7 @@ def test_ref_spacing_to_size_and_grid_coordinates(spark):
         npt.assert_allclose(ours["northing"], gn.ravel(), rtol=0, atol=0)
 
 
+@needs_reference
 def test_ref_block_split_labels(spark, fixture):
     e, n, d, _ = fixture
     region = (0, 10, -10, 0)
@@ -71,6 +91,7 @@ def test_ref_block_split_labels(spark, fixture):
     npt.assert_array_equal(got, labels[order])
 
 
+@needs_reference
 def test_ref_block_reduce_mean_median(spark, fixture):
     e, n, d, _ = fixture
     region = (0, 10, -10, 0)
@@ -85,6 +106,7 @@ def test_ref_block_reduce_mean_median(spark, fixture):
         npt.assert_allclose(pdf["scalars"], dd, rtol=1e-12)
 
 
+@needs_reference
 def test_ref_block_mean_three_modes(spark, fixture):
     e, n, d, w = fixture
     region = (0, 10, -10, 0)
@@ -118,6 +140,7 @@ def test_ref_block_mean_three_modes(spark, fixture):
     npt.assert_allclose(pdf["weight_scalars"], ww, rtol=1e-10)
 
 
+@needs_reference
 def test_ref_checkerboard(spark, fixture):
     e, n, _, _ = fixture
     cb_ref = vd.synthetic.CheckerBoard()
@@ -134,6 +157,7 @@ def test_ref_checkerboard(spark, fixture):
     npt.assert_allclose(got, want[order], rtol=1e-12)
 
 
+@needs_reference
 def test_ref_trend(spark, fixture):
     e, n, _, w = fixture
     d = 5.0 + 2.0 * e - 3.0 * n + 0.5 * e * n
@@ -146,6 +170,7 @@ def test_ref_trend(spark, fixture):
     npt.assert_allclose(ours.coef_, ref.coef_, rtol=1e-8, atol=1e-10)
 
 
+@needs_reference
 def test_ref_spline(spark, fixture):
     e, n, d, w = fixture
     qe = np.linspace(1, 9, 25)
@@ -174,6 +199,7 @@ def test_ref_spline(spark, fixture):
     npt.assert_allclose(got, want, rtol=1e-6, atol=1e-8 * np.abs(want).max())
 
 
+@needs_reference
 def test_ref_kneighbors(spark, fixture):
     e, n, d, _ = fixture
     qe = np.linspace(0.5, 9.5, 40)
@@ -189,6 +215,7 @@ def test_ref_kneighbors(spark, fixture):
         npt.assert_allclose(got, want, rtol=1e-12)
 
 
+@needs_reference
 def test_ref_distance_mask(spark, fixture):
     e, n, d, _ = fixture
     qe = np.linspace(-1, 11, 30)
@@ -204,6 +231,7 @@ def test_ref_distance_mask(spark, fixture):
     npt.assert_array_equal(got, want)
 
 
+@needs_reference
 def test_ref_median_distance(spark, fixture):
     from verde_spark.operators.neighbors import median_distance
 
@@ -220,6 +248,7 @@ def test_ref_median_distance(spark, fixture):
     npt.assert_allclose(got, want[order], rtol=1e-12)
 
 
+@needs_reference
 def test_ref_variance_to_weights(spark):
     from verde.utils import variance_to_weights as ref_v2w
 
@@ -235,6 +264,7 @@ def test_ref_variance_to_weights(spark):
     npt.assert_allclose(got, want, rtol=1e-12)
 
 
+@needs_reference
 def test_ref_rolling_window_membership(spark, fixture):
     from verde_spark.operators.windows import rolling_window
 
@@ -257,6 +287,7 @@ def test_ref_rolling_window_membership(spark, fixture):
     assert got == {k: v for k, v in want.items() if v}
 
 
+@needs_reference
 def test_ref_profile_line_scatter_coordinates():
     from verde_spark.coordinates import line_coordinates, profile_coordinates, scatter_points
 
@@ -278,6 +309,7 @@ def test_ref_profile_line_scatter_coordinates():
     npt.assert_allclose(gn, wn, rtol=0, atol=0)
 
 
+@needs_reference
 def test_ref_inside_and_longitude_continuity(spark, fixture):
     e, n, d, _ = fixture
     want = vd.inside((e, n), (2.0, 8.0, -8.0, -2.0))
@@ -302,6 +334,7 @@ def test_ref_inside_and_longitude_continuity(spark, fixture):
     npt.assert_allclose(np.sort(got), np.sort(ref_lon), rtol=0, atol=1e-12)
 
 
+@needs_reference
 def test_ref_expanding_window_membership(spark, fixture):
     from verde_spark.operators.windows import expanding_window
 
@@ -320,6 +353,7 @@ def test_ref_expanding_window_membership(spark, fixture):
     assert got == want
 
 
+@needs_reference
 def test_ref_vector_spline2d(spark):
     rng = np.random.RandomState(3)
     e = rng.uniform(0, 5000, 150)
@@ -343,6 +377,7 @@ def test_ref_vector_spline2d(spark):
     npt.assert_allclose(got["north_component_pred"], wn, rtol=1e-6, atol=1e-8 * np.abs(wn).max())
 
 
+@needs_reference
 def test_ref_chain_end_to_end(spark):
     # the EP2 pipeline through the REFERENCE vs through our engine: a verde
     # user switching engines gets the same grid values
@@ -378,6 +413,7 @@ def test_ref_chain_end_to_end(spark):
     npt.assert_allclose(got, want, rtol=2e-3, atol=1e-5 * np.abs(want).max())
 
 
+@needs_reference
 def test_ref_block_shuffle_split(spark, fixture):
     e, n, d, _ = fixture
     X = np.column_stack([e, n])
@@ -398,6 +434,7 @@ def test_ref_block_shuffle_split(spark, fixture):
         assert got_te == rte and got_tr == rtr
 
 
+@needs_reference
 def test_ref_block_kfold(spark, fixture):
     e, n, d, _ = fixture
     X = np.column_stack([e, n])
@@ -420,6 +457,7 @@ def test_ref_block_kfold(spark, fixture):
         assert got == ref_folds
 
 
+@needs_reference
 def test_ref_train_test_split_blocked(spark, fixture):
     e, n, d, _ = fixture
     train_ref, test_ref = vd.train_test_split(
@@ -434,6 +472,7 @@ def test_ref_train_test_split_blocked(spark, fixture):
     assert got_te == set(test_ref[0][0])
 
 
+@needs_reference
 def test_ref_partition_by_sum_and_project_region():
     from verde.utils import partition_by_sum as ref_pbs
 
@@ -449,6 +488,7 @@ def test_ref_partition_by_sum_and_project_region():
     npt.assert_allclose(got, want, rtol=0, atol=0)
 
 
+@needs_reference
 def test_ref_score_and_cross_val_score(spark, fixture):
     e, n, d, w = fixture
     # R² score parity: fitted estimator scored on held-out points
@@ -475,6 +515,7 @@ def test_ref_score_and_cross_val_score(spark, fixture):
     npt.assert_allclose(our_scores, ref_scores, rtol=1e-8)
 
 
+@needs_reference
 def test_ref_cross_val_score_default_cv(spark, fixture):
     # verde's DEFAULT cv is row-wise KFold(5, shuffle=True, random_state=0)
     # (reference model_selection.py:759-760), NOT a blocked split; our
@@ -488,6 +529,7 @@ def test_ref_cross_val_score_default_cv(spark, fixture):
     npt.assert_allclose(our_scores, np.asarray(ref_scores), rtol=1e-8)
 
 
+@needs_reference
 def test_ref_splinecv(spark, fixture):
     e, n, d, _ = fixture
     from verde_spark.operators.splinecv import SplineCV
@@ -504,6 +546,7 @@ def test_ref_splinecv(spark, fixture):
     assert ours.damping_ == ref.damping_
 
 
+@needs_reference
 def test_ref_load_surfer(tmp_path):
     from verde.io import load_surfer as ref_load
 
@@ -525,6 +568,7 @@ def test_ref_load_surfer(tmp_path):
     npt.assert_allclose(region[2:], (ref.coords["northing"][0], ref.coords["northing"][-1]))
 
 
+@needs_reference
 def test_ref_kneighbors_queries_outside_data_region(spark, fixture):
     # queries far outside the data bbox force the cell join to escalate
     # rings / fall back — the k-set must still match the reference exactly
@@ -540,6 +584,7 @@ def test_ref_kneighbors_queries_outside_data_region(spark, fixture):
     npt.assert_allclose(got["pred"].to_numpy(), want[order], rtol=1e-12)
 
 
+@needs_reference
 def test_ref_vector_independent_components(spark, fixture):
     e, n, d, _ = fixture
     d2 = 0.5 * d - 3.0
@@ -565,6 +610,7 @@ def test_ref_vector_independent_components(spark, fixture):
     npt.assert_allclose(got["north_component_pred"], wn, rtol=1e-6)
 
 
+@needs_reference
 def test_ref_vector_score_scatter_profile(spark, fixture):
     # the reference's Vector inherits scatter/profile/score from
     # BaseGridder; score averages per-component R² (base/utils.py:15-66).
@@ -596,6 +642,7 @@ def test_ref_vector_score_scatter_profile(spark, fixture):
     assert len(pr) == 30 and pr["distance"].iloc[-1] == 10.0
 
 
+@needs_reference
 def test_ref_vector_spline2d_score(spark):
     # VectorSpline2D.score: component-averaged R², parity vs the reference
     # on the same (global, untiled) solve
@@ -618,6 +665,7 @@ def test_ref_vector_spline2d_score(spark):
     assert sc.count() == 25
 
 
+@needs_reference
 def test_ref_distance_mask_projection(spark, fixture):
     # verde mask.py:57-66: projection applied to data AND query coordinates
     # before the distance test — linear map through both engines
@@ -640,6 +688,7 @@ def test_ref_distance_mask_projection(spark, fixture):
     npt.assert_array_equal(got, want)
 
 
+@needs_reference
 def test_ref_spline_force_coords(spark, fixture):
     """Custom force locations (verde spline.py:369-377, 458-462): fewer
     forces than data → rectangular least-squares. Single tile = exact
@@ -699,6 +748,7 @@ def test_ref_public_api_surface():
     assert missing == []
 
 
+@needs_reference
 def test_ref_maxabs_minmax(spark):
     """maxabs/minmax parity: NumPy path against the actual reference
     functions, Spark path against the NumPy path on the same values."""
@@ -730,3 +780,69 @@ def test_ref_maxabs_minmax(spark):
     # nan=True skips it (the extra x=0.0 row joins the value pool)
     want_nan_true = vd.maxabs(a[:n], b[:n], np.array([0.0]))
     assert vs.maxabs(dfn, nan=True) == pytest.approx(want_nan_true, rel=1e-9)
+
+
+_STUB_ROOTS = ("pooch", "xarray", "dask", "scipy", "sklearn")
+
+# Run load_reference() in a fresh interpreter (this session's sys.modules
+# is not clean) and report each verde/stand-in module with its __file__:
+# None for a stand-in, the path for a real package.
+_LOAD_IN_CHILD = """
+import importlib.util, json, sys
+sys.path.insert(0, sys.argv[1])
+import verde_ref
+verde_ref.REFERENCE_ROOT = sys.argv[2]
+installed = {n: importlib.util.find_spec(n) is not None for n in sys.argv[3:]}
+roots = ("verde", *sys.argv[3:])
+vd = verde_ref.load_reference()
+print(json.dumps({
+    "name": None if vd is None else vd.__name__,
+    "installed": installed,
+    "modules": {m: getattr(mod, "__file__", None) for m, mod in sys.modules.items()
+                if m.split(".")[0] in roots},
+}))
+"""
+
+
+def _load_in_child(reference_root=None):
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    args = [tests_dir, reference_root or REFERENCE_ROOT, *_STUB_ROOTS]
+    out = subprocess.run(
+        [sys.executable, "-c", _LOAD_IN_CHILD, *args],
+        capture_output=True, text=True, timeout=120, check=True,
+    )
+    return json.loads(out.stdout.splitlines()[-1])
+
+
+def test_load_reference_leaves_no_stand_ins():
+    """Without verde, load_reference() returns None and installs no
+    stand-in; with it, it returns the verde package."""
+    got = _load_in_child()
+    if got["name"] is None:
+        assert got["modules"] == {}
+    else:
+        assert got["name"] == "verde"
+
+
+def test_load_reference_keeps_real_packages(tmp_path):
+    """A checkout whose verde ships _version_generated.py, next to a real
+    pooch: neither is replaced by a stand-in, and every other dependency
+    is stubbed exactly when it is not installed."""
+    (tmp_path / "verde").mkdir()
+    (tmp_path / "verde" / "_version_generated.py").write_text("version = '9.9'\n")
+    (tmp_path / "verde" / "__init__.py").write_text(
+        "from ._version_generated import version\n"
+        "import dask, pooch, scipy.spatial, sklearn.base, xarray\n"
+    )
+    (tmp_path / "pooch").mkdir()
+    (tmp_path / "pooch" / "__init__.py").write_text("")
+    got = _load_in_child(str(tmp_path))
+    mods = got["modules"]
+    assert got["name"] == "verde"
+    assert mods["verde"] == str(tmp_path / "verde" / "__init__.py")
+    assert mods["verde._version_generated"] == str(
+        tmp_path / "verde" / "_version_generated.py"
+    )
+    assert mods["pooch"] == str(tmp_path / "pooch" / "__init__.py")
+    for name in ("xarray", "dask", "scipy", "sklearn"):
+        assert (mods[name] is not None) == got["installed"][name], name

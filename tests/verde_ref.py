@@ -1,11 +1,21 @@
-"""Load the REFERENCE implementation (read-only at /root/reference) as a
-test oracle.
+"""Load the REFERENCE implementation (fatiando/verde) as a test oracle.
 
-The container lacks verde's heavy dependencies (scipy, sklearn, pooch,
-numba), but the reference's numerical core is NumPy + pandas.  This
-module installs the *minimal* stand-ins the reference imports:
+``load_reference()`` finds verde in one of two places: a read-only
+checkout in a ``reference/`` directory beside this repository (put on
+``sys.path`` only when its ``reference/verde`` directory exists), or an
+installed ``verde`` package.  Where neither is there it imports nothing,
+installs no stand-in and returns ``None``; test_reference_parity.py then
+skips its oracle comparisons and still runs ``test_ref_public_api_surface``,
+which needs no oracle.
 
-* ``pooch`` / ``verde._version_generated`` — import-time plumbing only;
+Where verde is found, the reference's numerical core is NumPy + pandas,
+but it imports heavy dependencies (scipy, sklearn, pooch, xarray, dask)
+that may be missing.  For each one that ``importlib.util.find_spec`` does
+not find, this module installs a *minimal* stand-in; an installed package
+is never shadowed:
+
+* ``pooch`` / ``verde._version_generated`` — import-time plumbing only
+  (the latter only when the found verde has no ``_version_generated.py``);
 * ``scipy.spatial.cKDTree`` — brute-force NumPy nearest-neighbor with
   scipy's return conventions (fixture sizes are hundreds of points);
 * ``sklearn`` pieces — ``BaseEstimator/clone/check_is_fitted/
@@ -30,10 +40,19 @@ at test time, as an oracle.
 from __future__ import annotations
 
 import importlib.machinery
+import importlib.util
+import os
 import sys
 import types
 
 import numpy as np
+
+#: Where a read-only verde checkout is looked for: ``reference/`` beside
+#: the repository that holds this file.
+REFERENCE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "reference",
+)
 
 
 def _module(name: str) -> types.ModuleType:
@@ -43,8 +62,13 @@ def _module(name: str) -> types.ModuleType:
     return mod
 
 
-def _install_stubs():
-    if "pooch" not in sys.modules:
+def _missing(name: str) -> bool:
+    """True when no real (or already stubbed) top-level package exists."""
+    return importlib.util.find_spec(name) is None
+
+
+def _install_stubs(verde_spec):
+    if _missing("pooch"):
         pooch = _module("pooch")
         pooch.os_cache = lambda name: "/tmp/_fake_pooch"
         pooch.__version__ = "1.0-stub"
@@ -59,12 +83,15 @@ def _install_stubs():
         pooch.create = lambda *a, **kw: _Pooch()
         sys.modules["pooch"] = pooch
 
-    if "verde._version_generated" not in sys.modules:
+    if "verde._version_generated" not in sys.modules and not any(
+        os.path.isfile(os.path.join(loc, "_version_generated.py"))
+        for loc in verde_spec.submodule_search_locations or ()
+    ):
         vg = _module("verde._version_generated")
         vg.version = "0.0.0+reference-oracle"
         sys.modules["verde._version_generated"] = vg
 
-    if "xarray" not in sys.modules:
+    if _missing("xarray"):
         # only grid/Dataset assembly touches xarray; parity tests compare
         # array outputs, so attribute access fails only if actually used
         xarray = _module("xarray")
@@ -88,7 +115,7 @@ def _install_stubs():
         xarray.Dataset = _NoXarray
         sys.modules["xarray"] = xarray
 
-    if "dask" not in sys.modules:
+    if _missing("dask"):
         dask = _module("dask")
 
         def delayed(func=None, **kwargs):
@@ -97,7 +124,7 @@ def _install_stubs():
         dask.delayed = delayed
         sys.modules["dask"] = dask
 
-    if "scipy" not in sys.modules:
+    if _missing("scipy"):
         scipy = _module("scipy")
         spatial = _module("scipy.spatial")
         interpolate = _module("scipy.interpolate")
@@ -145,7 +172,7 @@ def _install_stubs():
         sys.modules["scipy.spatial"] = spatial
         sys.modules["scipy.interpolate"] = interpolate
 
-    if "sklearn" not in sys.modules:
+    if _missing("sklearn"):
         import inspect
 
         sklearn = _module("sklearn")
@@ -358,10 +385,15 @@ def _install_stubs():
 
 
 def load_reference():
-    """Import and return the reference ``verde`` package (oracle)."""
-    _install_stubs()
-    if "/root/reference" not in sys.path:
-        sys.path.insert(0, "/root/reference")
+    """Import and return the reference ``verde`` package (oracle), or
+    ``None`` when neither the checkout nor an installed verde exists."""
+    checkout = os.path.isdir(os.path.join(REFERENCE_ROOT, "verde"))
+    if checkout and REFERENCE_ROOT not in sys.path:
+        sys.path.insert(0, REFERENCE_ROOT)
+    spec = importlib.util.find_spec("verde")
+    if spec is None:
+        return None
+    _install_stubs(spec)
     import verde  # noqa: deferred until stubs are in place
 
     return verde
