@@ -1,6 +1,5 @@
-"""Crawl-policy gates (operators/crawl.py) + anchor-text aggregation
-(operators/linkgraph.py): three-engine parity, plan shapes, and the
-keep-best near-dup policy."""
+"""Crawl-policy gates (operators/crawl.py): three-engine parity, plan
+shapes, and the keep-best near-dup policy."""
 
 import duckdb
 import pandas as pd
@@ -17,11 +16,6 @@ from verde_spark.operators.crawl import (
     reference_host_suffixes,
     reference_meta_robots,
     robots_filter,
-)
-from verde_spark.operators.linkgraph import (
-    extract_anchor_texts,
-    top_anchor_texts,
-    top_anchor_texts_sql,
 )
 
 # html fixtures chosen to hit every arm: both attribute orders, both
@@ -159,45 +153,6 @@ def test_blocklist_gate_catches_whitespace_padded_urls(spark):
     )
     out = [r["url"] for r in filter_blocklist(pages, ["example.com"]).collect()]
     assert out == ["https://keep.com/y"]
-
-
-def test_anchor_texts_and_topk_vs_duckdb(spark):
-    rows = []
-    for i in range(30):
-        dst = f"site{i % 3}.com"
-        rows.append((
-            f"https://src{i}.org/",
-            f'<a href="https://{dst}/">  Visit\n {dst.upper()} </a>'
-            f'<a href="/self">me</a>'
-            f'<a href="//proto.net/x">Proto</a>'
-            f'<a href="https://{dst}/other"><b>skip</b></a>'
-            f'<a href="https://{dst}/other"></a>',
-        ))
-    pages = spark.createDataFrame(rows, "url string, html_str string").withColumn(
-        "html", F.col("html_str").cast("binary")
-    )
-    # raw extraction: whitespace collapsed, empties and nested-markup
-    # anchors skipped, relative + protocol-relative arms resolved
-    anchors = extract_anchor_texts(pages).collect()
-    per_src = [a for a in anchors if a["src_url"] == rows[0][0]]
-    assert sorted(a["anchor"] for a in per_src) == ["Proto", "Visit SITE0.COM", "me"]
-    assert {a["link"] for a in per_src} == {
-        "https://site0.com/", "https://src0.org/self", "https://proto.net/x",
-    }
-    got = (
-        top_anchor_texts(pages, k=2)
-        .orderBy("dst_domain", "rank")
-        .toPandas()
-    )
-    con = duckdb.connect()
-    con.register("pages_tbl", pd.DataFrame(rows, columns=["url", "html_str"]))
-    exp = con.execute(
-        top_anchor_texts_sql("select url, html_str from pages_tbl", 2)
-        + " ORDER BY dst_domain, rank"
-    ).df()
-    assert list(got["dst_domain"]) == list(exp["dst_domain"])
-    assert list(got["anchor"]) == list(exp["anchor"])
-    assert [int(x) for x in got["n_anchors"]] == [int(x) for x in exp["n_anchors"]]
 
 
 def test_dedup_keep_col_keeps_best_quality(spark):

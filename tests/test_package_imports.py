@@ -32,7 +32,6 @@ def test_import_leaves_text_stack_unloaded():
         "verde_spark.functions.urls",
         "verde_spark.operators.dedup",
         "verde_spark.operators.crawl",
-        "verde_spark.sources.snapshots",
     }
     assert "verde_spark.operators.spline" in loaded
     assert not text_stack & set(loaded)
@@ -42,7 +41,7 @@ def test_every_exported_name_resolves():
     got = _run(
         "import json, sys, verde_spark as v\n"
         "missing = [n for n in v.__all__ if not hasattr(v, n)]\n"
-        "from verde_spark import dedup_url, SnapshotStore\n"
+        "from verde_spark import dedup_url\n"
         "from verde_spark.functions.urls import dedup_url as direct\n"
         "print(json.dumps([missing, dedup_url is direct,"
         " 'verde_spark.operators.dedup' in sys.modules]))"

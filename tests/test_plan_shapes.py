@@ -382,20 +382,6 @@ def test_crawl_gates_fuse_into_scan(spark, pages_parquet):
     assert "ReadSchema: struct<url:string,html:binary>" in plan
 
 
-def test_top_anchor_texts_plan_shape(spark, pages_parquet):
-    """top_anchor_texts: map-side partial count before the agg exchange,
-    WindowGroupLimit partial top-k below the window exchange, exactly 2
-    exchanges total, zero Python — the per-host anchor rollup a 10^12-
-    page corpus can afford."""
-    from verde_spark.operators.linkgraph import top_anchor_texts
-
-    plan = _plan(top_anchor_texts(spark.read.parquet(pages_parquet), k=3))
-    assert "partial_count" in plan
-    assert "WindowGroupLimit" in plan
-    assert plan.count("Exchange") == 2
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
 def test_gopher_and_c4_gates_fuse_into_scan(spark, pages_parquet):
     """passes_gopher + passes_c4 + c4_filtered_text over a parquet scan:
     the full quality-rule stack is pure Catalyst — zero Exchange, zero

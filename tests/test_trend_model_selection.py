@@ -111,6 +111,14 @@ def test_block_kfold_covers_everything(spark):
     assert total_test == n  # folds partition the data
 
 
+@pytest.mark.parametrize(
+    "cls, n_splits", [(BlockKFold, 3), (BlockShuffleSplit, 4)],
+    ids=["BlockKFold", "BlockShuffleSplit"],
+)
+def test_block_splitters_get_n_splits(cls, n_splits):
+    assert cls(spacing=1, n_splits=n_splits).get_n_splits() == n_splits
+
+
 def test_block_kfold_balance(spark):
     df = _scatter_df(spark, n=2000)
     kfold = BlockKFold(spacing=2.5, n_splits=4, shuffle=False, balance=True)

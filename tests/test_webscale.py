@@ -158,7 +158,7 @@ def test_token_count_whitespace_edges(spark):
     """\\S+-run semantics (review r5): trim() strips only SPACES, so the
     old trim+split counted phantom edge tokens on tab/newline-padded
     text — +1 token on every newline-terminated document, corrupting
-    pack_sequences offsets and the quality words denominator."""
+    the quality words denominator."""
     import duckdb
 
     cases = [
@@ -189,62 +189,6 @@ def test_token_count_whitespace_edges(spark):
             [t],
         ).fetchone()
         assert n == want, (t, n, want)
-
-
-def test_pack_sequences_null_text_zero_span(spark):
-    """A NULL-text doc packs as a zero-token span (review r5: a NULL
-    span vanished from the window sum while the doc still got an end
-    offset overlapping its neighbor's)."""
-    from verde_spark.operators.packing import pack_sequences
-
-    rows = [(1, "a b c"), (2, None), (3, "d e"), (4, "x y z w")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = pack_sequences(
-        df, seq_len=4, n_shards=1, hash_expr=F.col("doc_id")
-    ).toPandas().set_index("doc_id")
-    assert out.loc[2, "n_tokens"] == 0
-    assert out.loc[2, "start_tok"] == out.loc[2, "end_tok"]
-    # spans tile the shard stream with one separator between docs
-    ordered = out.sort_values("start_tok")
-    starts, ends = ordered["start_tok"].tolist(), ordered["end_tok"].tolist()
-    assert all(s2 == e1 + 1 for e1, s2 in zip(ends, starts[1:]))
-
-
-def test_encode_tokens_null_text_map_join_parity(spark):
-    """NULL text → NULL token_ids in BOTH engines (review r5: the join
-    engine coalesced null docs to [] while the map engine kept NULL)."""
-    from verde_spark.functions.vocab import build_vocab, encode_tokens
-
-    df = spark.createDataFrame(
-        [(1, "a b a"), (2, None), (3, "")], "doc_id long, text string"
-    )
-    vocab = build_vocab(df, size=10)
-    for method in ("map", "join"):
-        got = {
-            r["doc_id"]: r["token_ids"]
-            for r in encode_tokens(df, vocab, method=method).collect()
-        }
-        assert got[2] is None, method
-        assert got[3] == [], method
-        assert len(got[1]) == 3, method
-
-
-def test_bm25_rejects_unnormalized_terms(spark):
-    """Terms the tokenizer could never emit must raise, not silently
-    score 0 everywhere (review r5) — and validation keeps quotes out of
-    the generated DuckDB twin SQL."""
-    from verde_spark.operators.search import bm25_scores, bm25_sql
-
-    docs = spark.createDataFrame([(1, "the cat")], "doc_id long, text string")
-    for bad in (["don't"], ["two words"], [""]):
-        with pytest.raises(ValueError, match="normalized"):
-            bm25_scores(docs, bad)
-        with pytest.raises(ValueError, match="normalized"):
-            bm25_sql(bad)
-    # case is normalized, not rejected: "The" must score like "the"
-    a = bm25_scores(docs, ["The"]).collect()[0]["bm25"]
-    b = bm25_scores(docs, ["the"]).collect()[0]["bm25"]
-    assert a == b and a > 0
 
 
 def test_shingles(spark):
@@ -1357,41 +1301,6 @@ def test_corpus_report(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_main_entrypoint_clean_snapshot_store(spark, tmp_path, capsys):
-    """--job clean --snapshot-store commits each run as a SnapshotStore
-    version: two runs append two snapshots, time travel sees both states,
-    and the metrics line reports version + table totals from the manifest."""
-    import json as _json
-
-    from verde_spark.__main__ import main
-    from verde_spark.sources.snapshots import SnapshotStore
-
-    src = str(tmp_path / "pages_in")
-    synthesize_pages(spark, 300).write.parquet(src)
-    out = str(tmp_path / "corpus_store")
-
-    rc = main(["--input", src, "--output", out, "--job", "clean",
-               "--threshold", "1.0", "--min-tokens", "3",
-               "--snapshot-store", "--rows-per-file", "100"])
-    assert rc == 0
-    m1 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert m1["snapshot_version"] == 1
-    assert m1["rows_out"] == m1["table_rows"] > 0
-
-    rc = main(["--input", src, "--output", out, "--job", "clean",
-               "--threshold", "1.0", "--min-tokens", "3", "--snapshot-store"])
-    assert rc == 0
-    m2 = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert m2["snapshot_version"] == 2
-    assert m2["table_rows"] == 2 * m1["table_rows"]
-
-    store = SnapshotStore(out)
-    assert store.read(spark, version=1).count() == m1["table_rows"]
-    assert store.read(spark).count() == m2["table_rows"]
-    # sized output: run 1 respected --rows-per-file
-    assert all(e["rows"] <= 100 for e in store._snapshot(1)["files"])
-
-
 _GOPHER_TEXTS = [
     None,
     "",
@@ -1665,146 +1574,6 @@ def test_drop_duplicate_spans_matches_greedy_reference(spark):
     assert all("Subscribe" not in got[i] for i in (2, 4, 6))
     assert all(f"Document {i} opens" in got[i] for i in range(8))
     assert got[8] == "" and got[9] == "" and got[10] == "Short. Too short."
-
-
-def test_main_entrypoint_encode_job(spark, tmp_path, capsys):
-    """--job encode: clean → vocab → token ids → packed layout, three
-    parquet tables, layout consistent with the token table."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from verde_spark.__main__ import main
-
-    out = str(tmp_path / "enc")
-    assert main([
-        "--synthesize", "2000", "--job", "encode", "--output", out,
-        "--vocab-size", "200", "--seq-len", "64", "--n-shards", "4",
-        "--min-tokens", "3",
-    ]) == 0
-    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert stats["rows_kept"] == 2000 and stats["vocab_size"] == 200
-    assert stats["sequences"] > 0 and stats["shards"] == 4
-
-    vocab = spark.read.parquet(f"{out}/vocab")
-    toks = spark.read.parquet(f"{out}/tokens")
-    layout = spark.read.parquet(f"{out}/layout")
-    assert vocab.count() == 200
-    assert toks.count() == layout.count() == 2000
-    # every id is in-vocab or the unk marker
-    mx = vocab.agg(F.max("id")).first()[0]
-    bad = toks.filter(
-        F.exists("token_ids", lambda x: (x < -1) | (x > F.lit(mx)))
-    ).count()
-    assert bad == 0
-    # layout spans are consistent: end - start == n_ids per doc
-    j = toks.join(layout, "doc_id")
-    off = j.filter(F.col("end_tok") - F.col("start_tok") != F.col("n_ids")).count()
-    assert off == 0
-
-
-def test_encode_job_redact_pii_scrubs_training_tokens(spark, tmp_path, capsys):
-    """--redact-pii on the encode job must make the REDACTED text the
-    training text: the vocab/token tables a model trains on may not
-    contain fragments of the raw email — carrying a text_clean column
-    along while packing raw text would silently break the flag."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from verde_spark.__main__ import main
-
-    rows = [
-        (
-            f"http://ex.com/{i}",
-            "write to alice.secretperson77@corp.example.com for the "
-            "quarterly report and the full minutes of the meeting "
-            f"number {i}",
-        )
-        for i in range(30)
-    ]
-    src = str(tmp_path / "pii_pages")
-    spark.createDataFrame(rows, "url string, text string").withColumn(
-        "warc_ts", F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-    ).write.parquet(src)
-
-    out = str(tmp_path / "enc_redacted")
-    assert main([
-        "--input", src, "--job", "encode", "--output", out,
-        "--redact-pii", "--vocab-size", "100", "--seq-len", "32",
-        "--n-shards", "2", "--min-tokens", "3",
-    ]) == 0
-    capsys.readouterr()
-    vocab = spark.read.parquet(f"{out}/vocab").toPandas()
-    leaked = [t for t in vocab["token"] if "secretperson77" in t]
-    assert leaked == [], f"raw email fragments reached the vocab: {leaked}"
-    assert "email" in set(vocab["token"])  # the <EMAIL> token's word form
-
-
-def test_main_entrypoint_pretrain_job(spark, tmp_path, capsys):
-    """--job pretrain: clean → Arrow char-n-gram language routing →
-    α-temperature rebalance → vocab → token ids → packed layout.  The
-    composed one-command recipe; routing keeps only --langs, the mix
-    rebalances to --mix-total, and the four parquet tables stay
-    mutually consistent."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from verde_spark.__main__ import main
-    from verde_spark.functions.langid import LANG_SEEDS
-
-    rows = []
-    for lang, n in (("en", 40), ("fr", 20), ("de", 10), ("es", 5)):
-        rows += [
-            (f"http://{lang}.example.com/{i}", LANG_SEEDS[lang] + f" doc {i}")
-            for i in range(n)
-        ]
-    rows += [(f"http://und.example.com/{i}", "zz zz zz zz") for i in range(3)]
-    src = str(tmp_path / "pages_multi")
-    spark.createDataFrame(rows, "url string, text string").withColumn(
-        "warc_ts", F.to_timestamp(F.lit("2024-01-01 00:00:00"))
-    ).write.parquet(src)
-
-    out = str(tmp_path / "pre")
-    rc = main([
-        "--input", src, "--job", "pretrain", "--output", out,
-        "--langs", "en,fr", "--vocab-size", "150", "--seq-len", "64",
-        "--n-shards", "2", "--min-tokens", "3",
-    ])
-    assert rc == 0
-    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    # routing: de/es/und dropped, en/fr kept in full
-    assert stats["per_lang"] == {"en": 40, "fr": 20}
-    assert stats["rows_routed"] == 60 and stats["vocab_size"] == 150
-    assert stats["sequences"] > 0 and stats["shards"] == 2
-
-    toks = spark.read.parquet(f"{out}/tokens")
-    layout = spark.read.parquet(f"{out}/layout")
-    assert toks.count() == layout.count() == 60
-    assert set(
-        r["lang"] for r in toks.select("lang").distinct().collect()
-    ) == {"en", "fr"}
-    # layout spans are consistent: end - start == n_ids per doc
-    j = toks.join(layout, "doc_id")
-    assert j.filter(
-        F.col("end_tok") - F.col("start_tok") != F.col("n_ids")
-    ).count() == 0
-
-    # α=0 (uniform) rebalance to 30 docs: quotas clamp to populations,
-    # so each kept language lands at 15 (both have >= 15 docs)
-    out2 = str(tmp_path / "pre_mix")
-    rc = main([
-        "--input", src, "--job", "pretrain", "--output", out2,
-        "--langs", "en,fr", "--mix-total", "30", "--mix-alpha", "0.0",
-        "--vocab-size", "150", "--seq-len", "64", "--n-shards", "2",
-        "--min-tokens", "3",
-    ])
-    assert rc == 0
-    stats2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert stats2["rows_routed"] == 30
-    assert set(stats2["per_lang"]) == {"en", "fr"}
-    assert all(5 <= n <= 25 for n in stats2["per_lang"].values())
 
 
 # -- incremental dedup vs a prior snapshot --------------------------------

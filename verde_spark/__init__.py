@@ -76,9 +76,9 @@ __version__ = "0.1.0"
 
 from .session import RECOMMENDED_CONF, make_session
 
-# The web-text stack (urls, dedup, crawl, LMs, tokenizers, corpus
-# pipelines) loads on first attribute access, so a Python worker that
-# unpickles a spline or mask UDF imports only the spatial engine.
+# The web-text stack (urls, dedup, crawl, LMs, corpus pipelines) loads
+# on first attribute access, so a Python worker that unpickles a spline
+# or mask UDF imports only the spatial engine.
 _LAZY = {
     "canonical_url": "functions.urls",
     "dedup_url": "functions.urls",
@@ -94,10 +94,6 @@ _LAZY = {
     "drop_duplicate_paragraphs": "operators.dedup",
     "drop_duplicate_spans": "operators.dedup",
     "cap_per_domain": "operators.sampling",
-    "pack_sequences": "operators.packing",
-    "packing_stats": "operators.packing",
-    "bm25_scores": "operators.search",
-    "bm25_topk": "operators.search",
     "perplexity_buckets": "operators.mixing",
     "repeat_weighted": "operators.mixing",
     "sample_to_mix": "operators.mixing",
@@ -108,11 +104,6 @@ _LAZY = {
     "build_bloom": "operators.bloom",
     "normalize_text": "functions.normalize",
     "normalized_fingerprint": "functions.normalize",
-    "build_vocab": "functions.vocab",
-    "encode_tokens": "functions.vocab",
-    "EXAMPLE_BPE": "functions.bpe",
-    "BpeModel": "functions.bpe",
-    "train_bpe": "functions.bpe",
     "novel_docs": "operators.dedup",
     "seen_hashes": "operators.dedup",
     "semantic_dedup": "operators.dedup",
@@ -124,11 +115,6 @@ _LAZY = {
     "train_char_lm": "functions.charlm",
     "clean_corpus": "pipelines",
     "corpus_report": "pipelines",
-    "extract_anchor_texts": "operators.linkgraph",
-    "extract_links": "operators.linkgraph",
-    "host_graph": "operators.linkgraph",
-    "pagerank": "operators.linkgraph",
-    "top_anchor_texts": "operators.linkgraph",
     "filter_blocklist": "operators.crawl",
     "meta_robots": "operators.crawl",
     "reference_meta_robots": "operators.crawl",
@@ -147,7 +133,6 @@ _LAZY = {
     "robots_txt_rules": "operators.crawl",
     "sitemap_entries": "operators.crawl",
     "sitemap_urls": "operators.crawl",
-    "SnapshotStore": "sources.snapshots",
 }
 
 
@@ -181,10 +166,6 @@ __all__ = [
     "drop_duplicate_spans",
     "passes_c4",
     "passes_gopher",
-    "pack_sequences",
-    "packing_stats",
-    "bm25_scores",
-    "bm25_topk",
     "repeat_weighted",
     "sample_to_mix",
     "perplexity_buckets",
@@ -195,11 +176,6 @@ __all__ = [
     "bloom_might_contain",
     "normalize_text",
     "normalized_fingerprint",
-    "build_vocab",
-    "encode_tokens",
-    "train_bpe",
-    "BpeModel",
-    "EXAMPLE_BPE",
     "novel_docs",
     "seen_hashes",
     "semantic_dedup",
@@ -218,9 +194,6 @@ __all__ = [
     "pii_counts",
     "redact_pii",
     "reference_redact_pii",
-    "host_graph",
-    "extract_anchor_texts",
-    "extract_links",
     "filter_blocklist",
     "meta_robots",
     "reference_meta_robots",
@@ -239,10 +212,8 @@ __all__ = [
     "robots_sitemaps",
     "sitemap_entries",
     "sitemap_urls",
-    "top_anchor_texts",
     "extract_text",
     "point_in_polygon",
-    "pagerank",
     "polygon_join",
     "rasterize",
     "top_domains",
@@ -252,7 +223,6 @@ __all__ = [
     "Spline",
     "SplineCV",
     "TileCheckpoint",
-    "SnapshotStore",
     "Trend",
     "Vector",
     "VectorSpline2D",

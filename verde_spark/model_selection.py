@@ -260,6 +260,9 @@ class _BlockSplitter(BaseBlockCrossValidator):
     def _test_blocks(self, stats: pd.DataFrame) -> Iterator[np.ndarray]:
         raise NotImplementedError
 
+    def get_n_splits(self) -> int:
+        return self.n_splits
+
     def _stats(
         self, df: DataFrame, easting: str, northing: str, grid: Optional[BlockGrid] = None
     ) -> Tuple[BlockGrid, pd.DataFrame]:

@@ -5,7 +5,7 @@ domain blocklists remove whole categories cheaply).
 
 Reference context: fatiando/verde has no web layer; this module exists
 for the webtext payload (BASELINE.json north rule: Common-Crawl-style
-pages at 10^12 scale), alongside linkgraph / urls / extract.
+pages at 10^12 scale), alongside urls / extract.
 
 Spark-first shapes (both gates are scan-speed):
 
@@ -46,7 +46,7 @@ from ..functions.urls import _URL_RE
 
 #: content of a robots meta tag, attribute order name→content; the lazy
 #: [^>]*? and quote classes are the shared Java-regex / RE2 / Python
-#: subset (same discipline as extract.py / linkgraph.py)
+#: subset (same discipline as extract.py)
 _ROBOTS_NC_RE = (
     r"""(?is)<meta\b[^>]*?name\s*=\s*["']robots["'][^>]*?"""
     r"""content\s*=\s*["']([^"'<>]*)["']"""

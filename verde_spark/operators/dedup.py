@@ -1116,8 +1116,7 @@ def novel_docs(
     """Incremental exact dedup: keep only documents whose text content
     was NOT in *seen* (a ``text_hash`` table from :func:`seen_hashes`,
     e.g. the previous crawl snapshot) — the new-data gate of a rolling
-    ingestion pipeline (pair with ``checkpoint.incremental_manifest`` /
-    ``sources.snapshots`` for the storage side).
+    ingestion pipeline.
 
     ONE left-anti join on the fixed-width hash.  By default it shuffles
     both sides on the hash (AQE-skew eligible; correct at any scale).

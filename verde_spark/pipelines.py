@@ -132,7 +132,7 @@ def clean_corpus(
     snapshot's content-hash set (``operators.dedup.seen_hashes``) and
     documents already ingested are dropped by one anti-join on the
     64-bit hash before the within-batch dedup stages (the rolling-crawl
-    pattern; pair with ``sources.snapshots`` for the storage side).
+    pattern).
     """
     if blocklist is not None:
         from .operators.crawl import filter_blocklist
